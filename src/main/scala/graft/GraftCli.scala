@@ -89,19 +89,26 @@ object GraftCli {
     * stringify + `"null"`-literal drop over every column, append sink. */
   def runJdbc(spark: SparkSession, cfg: GraftConfig,
               sinkFormat: String = "parquet"): Long = {
+    val rel = spark.read.jdbc(cfg.connectionString, cfg.tableName,
+      JdbcPartitionedSource.connectionProperties(cfg))
+    // the configured timestamp column resolves against the relation's schema
+    // to its exact name: backtick-quoted on the Spark side, dialect-quoted
+    // in the pushed predicates (JdbcPartitionedSource.predicates)
+    val ts = JdbcPartitionedSource.resolveColumn(rel, cfg.timestampColumn)
+    val quoted = "`" + ts.replace("`", "``") + "`"
     // chunk planning reads ONLY the ts column (the reference's chunk query
     // projects the same single column — HanaToBQ.java:57)
-    val tsOnly = spark.read.jdbc(cfg.connectionString, cfg.tableName,
-        JdbcPartitionedSource.connectionProperties(cfg))
-      .select(col(cfg.timestampColumn).cast("long").as(cfg.timestampColumn))
+    val tsOnly = rel.select(col(quoted).cast("long").as(ts))
     // BOUNDED driver materialization: the chunk grid (distributed
     // boundaries + lead-window interval zip) coalesced to at most
     // maxScanPartitions contiguous predicates — the reference holds the
     // full unbounded boundary list on its driver (HanaToBQ.java:150-172);
     // here the driver list is O(cap) at any corpus size and scanned rows
     // are identical (Chunking.boundedScanIntervals).
-    val ivs = Chunking.boundedScanIntervals(tsOnly, cfg, tieBreak = Nil)
-    val scanned = JdbcPartitionedSource.read(spark, cfg, ivs)
+    val ivs = Chunking.boundedScanIntervals(tsOnly,
+      cfg.copy(timestampColumn = quoted), tieBreak = Nil)
+    val scanned = JdbcPartitionedSource.read(spark,
+      cfg.copy(timestampColumn = ts), ivs)
     val projected =
       RowOps.dropNullLiterals(RowOps.stringifyAll(scanned),
         scanned.columns.toIndexedSeq)

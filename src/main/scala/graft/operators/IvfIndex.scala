@@ -14,16 +14,18 @@ import graft.functions.VectorFunctions
   *   query: rank centroids per query, probe the nProbe nearest lists, exact
   *   cosine top-k over only those lists' members.
   *
-  * Scale shape (round 2): centroid MEANS still aggregate the exploded
-  * (vec, dim, v) table — a map-side-combined groupBy, the honest training
-  * cost — but per-vector DISTANCES no longer explode-join: the (tiny)
-  * nLists x dims centroid matrix is collected and shipped as a broadcast
+  * Scale shape: centroid MEANS aggregate the exploded (list, dim, v)
+  * table — a map-side-combined groupBy over nLists x dims groups, the
+  * honest training cost — while per-vector DISTANCES never explode-join:
+  * the (tiny) nLists x dims centroid matrix is collected and shipped as a
   * literal, and [[graft.functions.SquaredDistances]] computes all nLists
-  * distances per vector in one fused kernel. Round 1's formulation inflated
-  * rows 64x (dims) x nLists before re-aggregating; this one emits exactly
-  * nLists rows per vector. The driver round-trip per Lloyd iteration
-  * (collect centroids -> broadcast) is the standard distributed k-means shape
-  * (centroid state is O(nLists x dims), independent of corpus size).
+  * distances per vector in one fused kernel. The kernel runs once per
+  * VECTOR: Spark evaluates a `select`'s non-generator expressions AFTER
+  * the `Generate`, so [[centroidsFrom]] stages the list in a select of its
+  * own before exploding the embedding. The driver round-trip per Lloyd
+  * iteration (collect centroids -> literal) is the standard distributed
+  * k-means shape (centroid state is O(nLists x dims), independent of
+  * corpus size).
   *
   * Determinism engineering (oracle-enforced): centroid means use
   * DECIMAL-exact component sums; squared-distance terms follow EXACTLY
@@ -39,19 +41,20 @@ object IvfIndex {
     emb.select(col(id), posexplode(col("embedding")).as(Seq("dim", "v")))
       .withColumn("v", col("v").cast("double"))
 
-  /** (list, dim, c) centroids with the list computed INLINE (round-11
-    * rework): the old form joined the d-exploded component stream (64n
-    * rows) against a corpus-sized (vec_id -> list) relation — a shuffle of
-    * the amplified stream per Lloyd step. Computing the list as a narrow
-    * expression on the un-exploded row first means the explode feeds the
-    * (map-side-combined, nLists x d group) aggregate directly: zero joins,
-    * zero windows, one scan per step. Decimal sums unchanged — the same
-    * values reach the same groups, and exact decimal addition is
-    * order-free, so centroids (and every downstream assignment/probe) are
-    * bit-identical to the join form. */
-  private def centroidsFrom(emb: DataFrame, listCol: Column): DataFrame =
-    emb.select(listCol.as("list"),
-        posexplode(col("embedding")).as(Seq("dim", "v")))
+  /** (list, dim, c) centroids with the list computed INLINE — no join
+    * against a corpus-sized (vec_id -> list) relation, so the explode feeds
+    * the map-side-combined (nLists x d group) aggregate directly. `list` is
+    * staged in a select of its own BEFORE the explode: Spark evaluates a
+    * select's non-generator expressions in a `Project` after the
+    * `Generate`, where the list expression (the SquaredDistances kernel in
+    * every Lloyd step) would run once per exploded component, d times per
+    * vector, with the whole embedding copied into each row. Staged, it runs
+    * once per vector below the `Generate` (PlanSpec pins this shape). Exact
+    * decimal addition is order-free, so centroids (and every downstream
+    * assignment/probe) are bit-identical to the join form. */
+  private[operators] def centroidsFrom(emb: DataFrame, listCol: Column): DataFrame =
+    emb.select(listCol.as("list"), col("embedding"))
+      .select(col("list"), posexplode(col("embedding")).as(Seq("dim", "v")))
       .withColumn("v", col("v").cast("double"))
       .groupBy("list", "dim")
       .agg((sum(col("v").cast("decimal(28,12)")).cast("double") /

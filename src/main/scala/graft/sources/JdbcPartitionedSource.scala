@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.jdbc.JdbcDialects
 
 import graft.core.{GraftConfig, HanaTypes}
 import graft.operators.Chunking
@@ -38,9 +39,29 @@ object JdbcPartitionedSource {
   }
 
   /** Partition predicates for the chunk plan — the fan-out the reference
-    * builds at `HanaToBQ.java:247` + `HanaToDBRow.java:88`. */
+    * builds at `HanaToBQ.java:247` + `HanaToDBRow.java:88`. The timestamp
+    * column is the EXACT (case-preserved) column name, quoted with the
+    * source dialect's `quoteIdentifier`: Derby and HANA fold unquoted names
+    * to upper case, so a bare lower-case column could not be addressed. */
   def predicates(cfg: GraftConfig, intervals: Seq[(Long, Long)]): Array[String] =
-    Chunking.toPredicates(intervals, cfg.timestampColumn)
+    Chunking.toPredicates(intervals,
+      JdbcDialects.get(cfg.connectionString).quoteIdentifier(cfg.timestampColumn))
+
+  /** The exact name of the relation's column that `name` denotes under the
+    * session resolver (case-insensitive unless `spark.sql.caseSensitive`);
+    * an exact match wins over case variants of it. Fails naming the
+    * relation's columns when nothing or more than one column matches. */
+  def resolveColumn(rel: DataFrame, name: String): String = {
+    val resolver = rel.sparkSession.sessionState.conf.resolver
+    val names = rel.columns.toSeq
+    names.find(_ == name).getOrElse(names.filter(resolver(_, name)) match {
+      case Seq(one) => one
+      case Seq() => throw new IllegalArgumentException(
+        s"column '$name' not found in ${names.mkString("[", ", ", "]")}")
+      case many => throw new IllegalArgumentException(
+        s"column '$name' is ambiguous: ${many.mkString("[", ", ", "]")}")
+    })
+  }
 
   /** Parallel partitioned read: one Spark partition per `[lo,hi)` chunk. */
   def read(spark: SparkSession, cfg: GraftConfig,

@@ -65,11 +65,10 @@ object JdbcRoundtrip {
       (s, e)
     }
 
-    // Derby folds unquoted identifiers to upper case; Spark's JDBC writer
-    // quotes column names case-preserved, so the predicate column must be
-    // quoted the same way
+    // Spark's JDBC writer quotes column names case-preserved; the
+    // predicates quote the exact name (JdbcPartitionedSource.predicates)
     val cfg = GraftConfig(tableName = Table, connectionString = DbUrl,
-      driver = Driver, timestampColumn = "\"l_orderkey\"",
+      driver = Driver, timestampColumn = "l_orderkey",
       startTime = lo, chunkSize = width)
     JdbcPartitionedSource.read(spark, cfg, intervals)
       .orderBy("l_orderkey", "l_linenumber")

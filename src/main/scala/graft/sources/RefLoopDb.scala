@@ -91,10 +91,10 @@ object RefLoopDb {
       }
     }
 
-    // Derby folds unquoted identifiers upper-case; Spark's writer created the
-    // columns case-preserved, so the predicate column must be quoted
+    // Spark's writer created the columns case-preserved; the predicates
+    // quote the exact name (JdbcPartitionedSource.predicates)
     val cfg = GraftConfig(tableName = Table, connectionString = DbUrl,
-      driver = Driver, timestampColumn = "\"ts_epoch\"",
+      driver = Driver, timestampColumn = "ts_epoch",
       startTime = startTime, chunkSize = ChunkRows)
 
     // 1. introspect the live catalog through the fail-closed type map
@@ -110,10 +110,9 @@ object RefLoopDb {
     require(live == cat,
       s"catalog/scan schema drift: catalog=$cat scan=$live")
 
-    val planCfg = cfg.copy(timestampColumn = "ts_epoch") // DataFrame column name
     // bounded driver list: grid coalesced to <= cap contiguous intervals
     // (scanned rows identical; see Chunking.boundedScanIntervals)
-    val ivs = Chunking.boundedScanIntervals(whole, planCfg,
+    val ivs = Chunking.boundedScanIntervals(whole, cfg,
       Seq("l_orderkey", "l_linenumber"))
     // half-open reads are ts >= lo; the seed chunk must honor ts > startTime
     val shifted = ivs.map { case (lo, hi) =>

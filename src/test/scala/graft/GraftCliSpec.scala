@@ -137,4 +137,35 @@ class GraftCliSpec extends SparkSpec {
       "--startTime=0"))
     assert(!pq.cfg.connectionString.startsWith("jdbc:"))
   }
+
+  test("timestamp column resolves case-insensitively to its exact, quoted name") {
+    // Derby folds unquoted names to upper case: "ts_epoch" is only
+    // reachable quoted, TS under either spelling
+    val conn = DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      try st.execute("DROP TABLE SRC_LOWER") catch { case _: Exception => () }
+      st.execute("CREATE TABLE SRC_LOWER (\"ts_epoch\" BIGINT NOT NULL, ID BIGINT NOT NULL)")
+      st.execute("INSERT INTO SRC_LOWER VALUES " +
+        (0 until 100).map(i => s"(${i * 10}, $i)").mkString(", "))
+      st.close()
+    } finally conn.close()
+    setupTable()
+    def run(table: String, ts: String): Long = {
+      val dest = Files.createTempDirectory("graft_cli_ts").toString + "/out"
+      val args = readmeArgs(dest).map {
+        case a if a.startsWith("--tableName=") => s"--tableName=$table"
+        case a if a.startsWith("--timestampColumn=") => s"--timestampColumn=$ts"
+        case a if a.startsWith("--chunkSize=") => "--chunkSize=30"
+        case a => a
+      }
+      GraftCli.run(spark, GraftCli.parse(args))
+    }
+    assert(run("SRC_LOWER", "ts_epoch") == 100L)
+    assert(run("SRC_LOWER", "TS_EPOCH") == 100L)
+    assert(run("SRC", "TS") == 1000L)
+    assert(run("SRC", "ts") == 1000L)
+    val e = intercept[IllegalArgumentException](run("SRC", "ts_epoch"))
+    assert(e.getMessage.contains("'ts_epoch' not found"), e.getMessage)
+  }
 }

@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.functions.SquaredDistances
 import graft.sources.Tables
 
 /** Plan-shape assertions: the 100 TB design claims in Relational/Chunking
@@ -520,5 +522,26 @@ class PlanSpec extends SparkSpec {
       pa.take(2000))
     val ph = plan(Funnel.holtForecast(Tables.events(spark, sf)))
     assert(!ph.contains("Join"), ph.take(2000))
+  }
+
+  test("IVF Lloyd step: squared_distances runs beneath the explode, once per vector") {
+    // a select mixing a generator with other expressions plans those
+    // expressions ABOVE the Generate, where they run once per exploded
+    // component; the centroid frame must keep the kernel below it
+    val cents = (typedLit(Seq(Seq.fill(4)(0.0), Seq.fill(4)(1.0))),
+      typedLit(Seq(0L, 1L)))
+    val p = IvfIndex.centroidsFrom(Tables.embeddings(spark, sf),
+      IvfIndex.listExpr(cents)).queryExecution.optimizedPlan
+    def kernel(n: LogicalPlan): Boolean =
+      n.expressions.exists(_.exists(_.isInstanceOf[SquaredDistances]))
+    // the Generate itself and every node above it
+    def notBelow(n: LogicalPlan): Seq[LogicalPlan] = n match {
+      case g: Generate => Seq(g)
+      case o => o +: o.children.flatMap(notBelow)
+    }
+    val gens = p.collect { case g: Generate => g }
+    assert(gens.size == 1, p.treeString)
+    assert(!notBelow(p).exists(kernel), p.treeString)
+    assert(gens.head.child.exists(kernel), p.treeString)
   }
 }
