@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.GraftConfig
@@ -86,7 +86,15 @@ object GraftCli {
 
   /** The reference pipeline over a live JDBC source: chunk boundaries from
     * the timestamp column, one scan partition per `[lo,hi)` predicate,
-    * stringify + `"null"`-literal drop over every column, append sink. */
+    * stringify + `"null"`-literal drop over every column, append sink.
+    *
+    * Rows with `startTime <= ts < effectiveEnd` are appended: `startTime`
+    * is INCLUSIVE here, as [[GraftConfig]] documents. The reference's chunk
+    * query filters `ts > startTime`; [[graft.sources.RefLoopDb]]
+    * (`q_ref_loop_db`) keeps that exclusive start.
+    *
+    * Returns the number of rows this call appended (-1 for a remote sink),
+    * counted by the append job itself. */
   def runJdbc(spark: SparkSession, cfg: GraftConfig,
               sinkFormat: String = "parquet"): Long = {
     val rel = spark.read.jdbc(cfg.connectionString, cfg.tableName,
@@ -97,14 +105,9 @@ object GraftCli {
     val ts = JdbcPartitionedSource.resolveColumn(rel, cfg.timestampColumn)
     val quoted = "`" + ts.replace("`", "``") + "`"
     // chunk planning reads ONLY the ts column (the reference's chunk query
-    // projects the same single column — HanaToBQ.java:57)
+    // projects the same single column — HanaToBQ.java:57), once; the driver
+    // holds at most maxScanPartitions intervals at any table size
     val tsOnly = rel.select(col(quoted).cast("long").as(ts))
-    // BOUNDED driver materialization: the chunk grid (distributed
-    // boundaries + lead-window interval zip) coalesced to at most
-    // maxScanPartitions contiguous predicates — the reference holds the
-    // full unbounded boundary list on its driver (HanaToBQ.java:150-172);
-    // here the driver list is O(cap) at any corpus size and scanned rows
-    // are identical (Chunking.boundedScanIntervals).
     val ivs = Chunking.boundedScanIntervals(tsOnly,
       cfg.copy(timestampColumn = quoted), tieBreak = Nil)
     val scanned = JdbcPartitionedSource.read(spark,
@@ -112,14 +115,14 @@ object GraftCli {
     val projected =
       RowOps.dropNullLiterals(RowOps.stringifyAll(scanned),
         scanned.columns.toIndexedSeq)
-    AppendSink.append(projected, cfg.destDataset, sinkFormat)
-    // report rows at the destination by reading the SINK back — counting the
-    // projection would re-execute the whole partitioned JDBC scan against
-    // the source a second time
+    // the append job counts its own input rows: no second scan of the
+    // source, no read of the sink
+    val appended = Observation("graft_appended_rows")
+    AppendSink.append(projected.observe(appended, count(lit(1)).as("rows")),
+      cfg.destDataset, sinkFormat)
     sinkFormat match {
-      case "parquet" => AppendSink.readBack(spark, cfg.destDataset).count()
-      case "table"   => spark.table(cfg.destDataset).count()
-      case _         => -1L // remote sink; no offline count
+      case "parquet" | "table" => appended.get("rows").asInstanceOf[Long]
+      case _ => -1L // remote sink; no offline count
     }
   }
 

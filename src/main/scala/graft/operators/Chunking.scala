@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,6 +33,10 @@ import graft.core.GraftConfig
   *     to what a global sort would need anyway. With a total order (tie-broken
   *     by unique keys) the output is bit-identical to [[boundaries]] no matter
   *     where the range partitioner cuts.
+  *
+  * The JDBC scan plan ([[boundedScanIntervals]]) needs only the boundary
+  * VALUES, so it skips both: one read of the key column and an exact rank
+  * selection over it ([[valuesAtRanks]]).
   */
 object Chunking {
 
@@ -51,20 +56,28 @@ object Chunking {
 
   /** Scale-path equivalent of [[boundaries]]: distributed global row_number
     * via range partitioning + per-partition offsets. Output is identical
-    * given a total order (ts + unique tiebreak). */
+    * given a total order (ts + unique tiebreak).
+    *
+    * The counts and the numbering below both read `ranged`. Planned as two
+    * range exchanges, each samples its own cut points, so the two branches
+    * agree only when the engine happens to reuse one exchange for both (it
+    * did not over a cached input with AQE on). `ranged` is therefore
+    * materialized once, key columns only, with `__pid` stored: both
+    * branches read the same rows under the same partition ids. */
   def boundariesDistributed(df: DataFrame, ts: String, tieBreak: Seq[String],
                             chunkSize: Long, start: Long,
                             numPartitions: Int = 0): DataFrame = {
     val spark = df.sparkSession
-    val ord: Seq[Column] = (col(ts) +: tieBreak.map(col)).map(_.asc)
+    val keys: Seq[Column] = col(ts) +: tieBreak.map(col)
+    val ord: Seq[Column] = keys.map(_.asc)
     val n = if (numPartitions > 0) numPartitions
             else spark.sessionState.conf.numShufflePartitions
 
-    val filtered = df.filter(col(ts) > lit(start))
+    val filtered = df.filter(col(ts) > lit(start)).select(keys: _*)
     val ranged = filtered
       .repartitionByRange(n, ord: _*)
-      .sortWithinPartitions(ord: _*)
       .withColumn("__pid", spark_partition_id())
+      .localCheckpoint()
 
     // Tiny metadata aggregate: #rows per range partition -> cumulative offset.
     // O(#partitions) rows on the driver — the same cardinality the reference
@@ -117,7 +130,9 @@ object Chunking {
     * row_number + broadcast cumulative counts, and resolve each boundary's
     * successor (`lead`) with a self-join on the derived position — every
     * exchange is range- or hash-partitioned on boundary cardinality. Output
-    * is bit-identical to [[intervals]] (property-tested; same oracle). */
+    * is bit-identical to [[intervals]] (property-tested; same oracle).
+    * `ranged` is materialized once for the reason given at
+    * [[boundariesDistributed]]. */
   def intervalsDistributed(bounds: DataFrame, ts: String, start: Long,
                            sentinel: Long = GraftConfig.Sentinel,
                            numPartitions: Int = 0): DataFrame = {
@@ -129,8 +144,8 @@ object Chunking {
       .unionAll(Seq(start).toDF("b"))
     val ranged = seeded
       .repartitionByRange(n, col("b").asc)
-      .sortWithinPartitions(col("b").asc)
       .withColumn("__pid", spark_partition_id())
+      .localCheckpoint()
     val counts = ranged.groupBy("__pid").count()
     val wOff = Window.orderBy("__pid")
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -169,14 +184,17 @@ object Chunking {
     else intervalsDistributed(b, ts, start, sentinel)
   }
 
-  /** End-to-end chunk plan from a config, over an epoch-seconds column.
+  /** End-to-end chunk plan from a config, over an epoch-seconds column:
+    * intervals partitioning `[startTime, effectiveEnd)`, boundaries drawn
+    * from the rows with `startTime < ts < effectiveEnd`.
     * Boundary computation always takes the distributed row-number form (the
     * input table is the 100 TB side); the interval zip adapts to the
     * boundary count ([[intervalsAdaptive]] — the boundary set is usually
     * rowcount/chunkSize, tiny, but must survive small chunkSize at scale). */
   def plan(df: DataFrame, cfg: GraftConfig, tieBreak: Seq[String]): DataFrame = {
-    val b = boundariesDistributed(df, cfg.timestampColumn, tieBreak,
-      cfg.chunkSize, cfg.startTime)
+    val b = boundariesDistributed(
+      df.filter(col(cfg.timestampColumn) < lit(cfg.effectiveEnd)),
+      cfg.timestampColumn, tieBreak, cfg.chunkSize, cfg.startTime)
     intervalsAdaptive(b, cfg.timestampColumn, cfg.startTime, cfg.effectiveEnd)
   }
 
@@ -188,12 +206,28 @@ object Chunking {
   def toPredicates(intervals: Seq[(Long, Long)], ts: String): Array[String] =
     intervals.map { case (lo, hi) => s"$ts >= $lo AND $ts < $hi" }.toArray
 
-  /** DRIVER-FACING scan plan with a bounded footprint: the full chunk grid
-    * ([[plan]] — boundaries and interval zip both distributed), coalesced
-    * distributedly into at most `maxScanPartitions` CONTIGUOUS half-open
-    * intervals (groups of `ceil(#chunks / cap)` consecutive chunks; min lo /
-    * max hi per group — coverage and disjointness are inherited from the
-    * grid), and only THAT list collected.
+  /** DRIVER-FACING scan plan with a bounded footprint: at most
+    * `maxScanPartitions` contiguous half-open intervals
+    * `[startTime, b1) … [bk, effectiveEnd)` covering the rows with
+    * `startTime < ts < effectiveEnd` (the seed interval's `ts >= startTime`
+    * predicate also takes rows at exactly `startTime`).
+    *
+    * The result equals the full chunk grid ([[plan]]) coalesced into groups
+    * of `stride = ceil(#chunks / cap)` consecutive chunks, where
+    * `#chunks = N / chunkSize + 1` over the `N` keys in range. Group `g`
+    * starts at grid boundary `g·stride`, the key at rank
+    * `g·stride·chunkSize`, so the coalesced boundaries are exactly the keys
+    * at ranks that are multiples of `step = chunkSize·stride`. They are
+    * selected directly ([[valuesAtRanks]]) instead of building the grid:
+    *
+    *   - the key column is read ONCE, as longs, into a local checkpoint.
+    *     Later jobs read the checkpoint blocks; their lineage stops there,
+    *     so the source sees one pass. Its count gives `N`;
+    *   - the checkpoint is sorted once and the ranks are picked from it.
+    *
+    * `tieBreak` is accepted for the grid's signature and not needed: the
+    * value at a rank of a sorted multiset does not depend on how ties are
+    * ordered.
     *
     * This is the piece the JDBC scan API forces onto the driver — per-
     * partition predicates are plan-time strings — and the reference holds
@@ -208,16 +242,32 @@ object Chunking {
                            tieBreak: Seq[String],
                            maxScanPartitions: Int = 512): Seq[(Long, Long)] = {
     require(maxScanPartitions > 0, "maxScanPartitions must be positive")
-    // checkpoint: the grid feeds a count and a group-by — one computation
-    val grid = plan(df, cfg, tieBreak).select("chunk_id", "lo", "hi")
+    val k = col(cfg.timestampColumn).cast("long")
+    val keys = df.select(k.as("k"))
+      .filter(col("k") > lit(cfg.startTime) && col("k") < lit(cfg.effectiveEnd))
+      .as[Long](Encoders.scalaLong).rdd
       .localCheckpoint()
-    val nChunks = grid.count()
-    val stride = math.max(1L,
-      (nChunks + maxScanPartitions - 1) / maxScanPartitions.toLong)
-    grid
-      .groupBy(expr(s"chunk_id DIV $stride").as("__g"))
-      .agg(min("lo").as("lo"), max("hi").as("hi"))
-      .orderBy("lo")
-      .collect().map(r => (r.getAs[Long]("lo"), r.getAs[Long]("hi"))).toSeq
+    try {
+      val n = keys.count()
+      val nChunks = n / cfg.chunkSize + 1
+      val stride = math.max(1L,
+        (nChunks + maxScanPartitions - 1) / maxScanPartitions.toLong)
+      val bounds = valuesAtRanks(keys, cfg.chunkSize * stride,
+        df.sparkSession.sessionState.conf.numShufflePartitions)
+      (cfg.startTime +: bounds).zip(bounds :+ cfg.effectiveEnd).toSeq
+    } finally keys.unpersist(blocking = false)
+  }
+
+  /** Exact rank selection: the values at 1-based ranks `step, 2·step, …` of
+    * the ascending order of `values`, in order. One range-partitioned sort;
+    * `zipWithIndex` counts the sorted partitions and the selection reads the
+    * same shuffle output, so the counts and the numbering cannot disagree. */
+  private[operators] def valuesAtRanks(values: RDD[Long], step: Long,
+                                       numPartitions: Int): Array[Long] = {
+    require(step > 0, "step must be positive")
+    values.sortBy(identity, ascending = true, numPartitions)
+      .zipWithIndex()
+      .collect { case (v, i) if (i + 1) % step == 0 => v }
+      .collect()
   }
 }

@@ -66,6 +66,13 @@ object RefLoopDb {
   // fixture write happens once per (JVM, sfDir): the DB outlives the query
   @volatile private var loadedFor: Option[String] = None
 
+  /** Loads the fixture slice into Derby (once per JVM and `sfDir`), runs the
+    * loop, and returns the sink read back in a total order.
+    *
+    * `startTime` is EXCLUSIVE here: rows with `ts > startTime` arrive, the
+    * reference's chunk-query filter (`HanaToBQ.java:57`). The seed interval
+    * is shifted to `startTime + 1` for that. [[graft.GraftCli.runJdbc]]
+    * instead takes `startTime` inclusively, as [[GraftConfig]] documents. */
   def run(spark: SparkSession, sfDir: String, startTime: Long,
           sinkPath: String = "/tmp/graft_ref_loop_db_sink"): DataFrame = {
     if (!loadedFor.contains(sfDir)) synchronized {
@@ -110,8 +117,8 @@ object RefLoopDb {
     require(live == cat,
       s"catalog/scan schema drift: catalog=$cat scan=$live")
 
-    // bounded driver list: grid coalesced to <= cap contiguous intervals
-    // (scanned rows identical; see Chunking.boundedScanIntervals)
+    // bounded driver list: <= cap contiguous intervals from one read of the
+    // ts column (scanned rows identical; see Chunking.boundedScanIntervals)
     val ivs = Chunking.boundedScanIntervals(whole, cfg,
       Seq("l_orderkey", "l_linenumber"))
     // half-open reads are ts >= lo; the seed chunk must honor ts > startTime

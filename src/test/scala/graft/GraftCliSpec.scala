@@ -168,4 +168,96 @@ class GraftCliSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](run("SRC", "ts_epoch"))
     assert(e.getMessage.contains("'ts_epoch' not found"), e.getMessage)
   }
+
+  /** SRC_EDGE: 400 rows, every TS in 0..99 four times (ID = TS * 4 + copy). */
+  private def setupEdgeTable(): Unit = {
+    val conn = DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      try st.execute("DROP TABLE SRC_EDGE") catch { case _: Exception => () }
+      st.execute("CREATE TABLE SRC_EDGE (TS BIGINT NOT NULL, ID BIGINT NOT NULL)")
+      st.execute("INSERT INTO SRC_EDGE VALUES " +
+        (0 until 400).map(i => s"(${i / 4}, $i)").mkString(", "))
+      st.close()
+    } finally conn.close()
+  }
+
+  private def edgeArgs(dest: String, start: Long, end: Option[Long]): Seq[String] =
+    readmeArgs(dest).flatMap {
+      case a if a.startsWith("--tableName=") => Some("--tableName=SRC_EDGE")
+      case a if a.startsWith("--startTime=") => Some(s"--startTime=$start")
+      case a if a.startsWith("--endTime=") => end.map(e => s"--endTime=$e")
+      case a if a.startsWith("--chunkSize=") => Some("--chunkSize=7")
+      case a => Some(a)
+    }
+
+  private def sinkIds(dest: String): Seq[Long] =
+    AppendSink.readBack(spark, dest).select("ID").collect()
+      .map(_.getString(0).toLong).toSeq.sorted
+
+  test("startTime is inclusive: rows at exactly startTime arrive") {
+    setupEdgeTable()
+    val dest = Files.createTempDirectory("graft_cli_start").toString + "/out"
+    val n = GraftCli.run(spark, GraftCli.parse(edgeArgs(dest, 50L, None)))
+    assert(n == 200L)
+    // the four rows at TS = 50 are IDs 200..203
+    assert(sinkIds(dest) == (200L until 400L))
+  }
+
+  test("endTime bounds the scan: the sink holds exactly the rows in [startTime, endTime)") {
+    setupEdgeTable()
+    val dest = Files.createTempDirectory("graft_cli_end").toString + "/out"
+    val n = GraftCli.run(spark, GraftCli.parse(edgeArgs(dest, 20L, Some(61L))))
+    assert(n == 164L)
+    assert(sinkIds(dest) == (80L until 244L))
+  }
+
+  test("a startTime past every row appends nothing and still writes an empty sink") {
+    setupEdgeTable()
+    val dest = Files.createTempDirectory("graft_cli_empty").toString + "/out"
+    val n = GraftCli.run(spark, GraftCli.parse(edgeArgs(dest, 1000L, None)))
+    assert(n == 0L)
+    val back = AppendSink.readBack(spark, dest)
+    assert(back.columns.toSeq == Seq("TS", "ID"))
+    assert(back.count() == 0L)
+  }
+
+  test("the returned count is this call's rows, not the destination's") {
+    setupTable()
+    val dest = Files.createTempDirectory("graft_cli_twice").toString + "/out"
+    val p = GraftCli.parse(readmeArgs(dest))
+    assert(GraftCli.run(spark, p) == 1000L)
+    assert(GraftCli.run(spark, p) == 1000L)
+    assert(AppendSink.readBack(spark, dest).count() == 2000L)
+    val t = GraftCli.parse(
+      readmeArgs("graft_cli_table_twice") :+ s"--${GraftCli.SinkFormatFlag}=table")
+    try {
+      assert(GraftCli.run(spark, t) == 1000L)
+      assert(GraftCli.run(spark, t) == 1000L)
+      assert(spark.table("graft_cli_table_twice").count() == 2000L)
+    } finally spark.sql("DROP TABLE IF EXISTS graft_cli_table_twice")
+  }
+
+  test("the chunk plan reads the source once in at most four jobs; the job reads it twice") {
+    setupTable()
+    val p = GraftCli.parse(readmeArgs("/tmp/unused"))
+    val cfg = p.cfg.copy(driver = "org.apache.derby.jdbc.EmbeddedDriver")
+    val tsOnly = spark.read.jdbc(cfg.connectionString, cfg.tableName,
+        graft.sources.JdbcPartitionedSource.connectionProperties(cfg))
+      .select(org.apache.spark.sql.functions.col("TS").cast("long").as("TS"))
+    val (ivs, plan) = JobTrace.of(spark) {
+      graft.operators.Chunking.boundedScanIntervals(tsOnly, cfg, tieBreak = Nil)
+    }
+    assert(ivs.length == 1000 / 250 + 1)
+    assert(plan.jobs <= 4, s"${plan.jobs} jobs")
+    // one stage over the source, reading each of the 1000 rows once
+    assert(plan.jdbcStageRecords == Seq(1000L))
+    // the whole job: the key pass plus the chunked scan, nothing more
+    val dest = Files.createTempDirectory("graft_cli_reads").toString + "/out"
+    val (n, job) = JobTrace.of(spark) {
+      GraftCli.run(spark, GraftCli.parse(readmeArgs(dest)))
+    }
+    assert(n == 1000L)
+    assert(job.jdbcStageRecords.sum == 2000L)
+  }
 }

@@ -1,0 +1,50 @@
+package graft
+
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.SparkSession
+
+/** What a block of code ran, as a `SparkListener` saw it: the number of
+  * jobs, and the records read by each stage whose lineage holds a `JDBCRDD`
+  * (a read of the source database). */
+final case class JobTrace(jobs: Int, jdbcStageRecords: Seq[Long])
+
+object JobTrace {
+  private val Marker = "graft.JobTrace.marker"
+
+  /** Runs `body` and traces it. Listener events arrive asynchronously but in
+    * order, so a marker job run after `body` flushes them: once its end is
+    * seen, every earlier event has been delivered. */
+  def of[T](spark: SparkSession)(body: => T): (T, JobTrace) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val jdbc = new ConcurrentLinkedQueue[Long]
+    val markerId = new AtomicInteger(-1)
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == Marker))
+          markerId.set(e.jobId)
+        else jobs.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerId.get) flushed.countDown()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "JDBCRDD"))
+          jdbc.add(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobDescription(Marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      (out, JobTrace(jobs.get, jdbc.asScala.toSeq))
+    } finally sc.removeSparkListener(listener)
+  }
+}

@@ -73,6 +73,41 @@ class ChunkingPropertySpec extends SparkSpec {
     }
   }
 
+  test("capped scan intervals equal the coalesced chunk grid on tie-heavy input") {
+    import spark.implicits._
+    (1 to 6).foreach { _ =>
+      // 400 keys over ~30 values: boundaries repeat, groups start on ties
+      val ts = List.fill(400)(rnd.nextLong(30L))
+      val chunk = 1L + rnd.nextLong(8L)
+      val start = rnd.nextLong(5L) - 1L
+      val cap = 2 + rnd.nextInt(6)
+      val df = ts.zipWithIndex.map { case (t, i) => (t, i.toLong) }.toDF("ts", "id")
+      val cfg = GraftConfig(tableName = "t", timestampColumn = "ts",
+        startTime = start, chunkSize = chunk)
+      // the grid-coalesce result: groups of `stride` consecutive chunks
+      val grid = Chunking.plan(df, cfg, Seq("id"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toList
+      val stride = (grid.length + cap - 1) / cap
+      assert(stride > 1, s"cap $cap does not coalesce ${grid.length} chunks")
+      val coalesced = grid.groupBy(_._1 / stride).toList.sortBy(_._1)
+        .map { case (_, g) => (g.map(_._2).min, g.map(_._3).max) }
+      assert(Chunking.boundedScanIntervals(df, cfg, Seq("id"), cap) == coalesced)
+    }
+  }
+
+  test("rank selection equals driver-side order statistics at any partition count") {
+    (1 to 6).foreach { _ =>
+      val values = List.fill(300)(rnd.nextLong(40L))
+      val step = 1L + rnd.nextLong(50L)
+      val sorted = values.sorted.toIndexedSeq
+      val expected = (step to sorted.length.toLong by step).map(r => sorted((r - 1).toInt))
+      Seq(1, 3, 7).foreach { parts =>
+        val rdd = spark.sparkContext.parallelize(values, 4)
+        assert(Chunking.valuesAtRanks(rdd, step, parts).toSeq == expected)
+      }
+    }
+  }
+
   test("type map is total over the 21 declared types and fails closed otherwise") {
     val declared = HanaTypes.mapping(HanaTypes.RefCompatible).keys.toList
     declared.foreach { t =>

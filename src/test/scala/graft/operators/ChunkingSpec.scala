@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{JobTrace, SparkSpec}
 import graft.core.GraftConfig
 import graft.sources.Tables
 
@@ -32,6 +32,35 @@ class ChunkingSpec extends SparkSpec {
     assert(a == b)
     assert(a.nonEmpty)
     assert(a == a.sorted)
+  }
+
+  test("boundariesDistributed over a cached input equals the parity boundaries") {
+    // a cached input plans the counts branch and the numbering branch as two
+    // range exchanges over separate cache reads; each samples its own cut
+    // points, so their partition ids must not be trusted to agree
+    val cached = li.cache()
+    try {
+      cached.count()
+      val a = Chunking.boundaries(cached, "ts_epoch", tie, 100L, start)
+        .collect().map(_.getLong(0)).toSeq
+      val b = Chunking.boundariesDistributed(cached, "ts_epoch", tie, 100L, start, 7)
+        .collect().map(_.getLong(0)).toSeq
+      assert(a.nonEmpty)
+      assert(b == a)
+    } finally cached.unpersist(blocking = true)
+  }
+
+  test("intervalsDistributed over a cached boundary set equals the parity zip") {
+    // every row a boundary: enough rows that the range partitioner samples
+    val cached = li.filter(col("ts_epoch") > start).select("ts_epoch").cache()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    try {
+      cached.count()
+      val parity = rows(Chunking.intervals(cached, "ts_epoch", start))
+      assert(rows(Chunking.intervalsDistributed(cached, "ts_epoch", start,
+        numPartitions = 7)) == parity)
+    } finally cached.unpersist(blocking = true)
   }
 
   test("intervals partition [start, sentinel): seeded, contiguous, half-open, sentinel-closed (HanaToBQ.java:150-172)") {
@@ -125,5 +154,42 @@ class ChunkingSpec extends SparkSpec {
     val grid = Chunking.plan(li, cfg, tie)
       .collect().map(r => (r.getLong(1), r.getLong(2))).toSeq
     assert(capped == grid)
+  }
+
+  test("plan and boundedScanIntervals honour endTime: nothing inverted, nothing past it") {
+    val rows = li.filter(col("ts_epoch") > start).select("ts_epoch")
+      .collect().map(_.getLong(0)).sorted
+    val end = rows(rows.length / 2)
+    val inRange = rows.count(_ < end).toLong
+    val cfg = GraftConfig(tableName = "t", connectionString = "",
+      timestampColumn = "ts_epoch", startTime = start, endTime = Some(end),
+      chunkSize = 50L)
+    def check(ivs: Seq[(Long, Long)]): Unit = {
+      assert(ivs.head._1 == start && ivs.last._2 == end)
+      ivs.foreach { case (lo, hi) => assert(lo <= hi, s"inverted [$lo, $hi)") }
+      ivs.sliding(2).foreach {
+        case Seq((_, hi), (lo2, _)) => assert(hi == lo2)
+        case _ =>
+      }
+    }
+    val grid = Chunking.plan(li, cfg, tie)
+      .collect().map(r => (r.getLong(1), r.getLong(2))).toSeq
+    check(grid)
+    assert(grid.length == inRange / 50 + 1)
+    val ivs = Chunking.boundedScanIntervals(li, cfg, tie, maxScanPartitions = 16)
+    check(ivs)
+    val stride = (grid.length + 15) / 16
+    assert(ivs.length == inRange / (50 * stride) + 1)
+  }
+
+  test("boundedScanIntervals runs at most four jobs") {
+    val cfg = GraftConfig(tableName = "t", connectionString = "",
+      timestampColumn = "ts_epoch", startTime = start, chunkSize = 50L)
+    val input = li // its parquet schema inference is not the plan's
+    val (ivs, trace) = JobTrace.of(spark) {
+      Chunking.boundedScanIntervals(input, cfg, tie, maxScanPartitions = 16)
+    }
+    assert(ivs.nonEmpty)
+    assert(trace.jobs <= 4, s"${trace.jobs} jobs")
   }
 }
