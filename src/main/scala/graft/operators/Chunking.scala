@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.GraftConfig
+import graft.core.{GlobalRank, GraftConfig}
 
 /** Equi-depth chunk planning — the reference's most sophisticated computation
   * (SURVEY.md §2.3): the chunk-boundary window query (`HanaToBQ.java:57`)
@@ -21,22 +20,20 @@ import graft.core.GraftConfig
   * plus the driver-side interval zip with start seed and sentinel close
   * (`HanaToBQ.java:150-172`, sentinel `2000000000` at `:166`).
   *
-  * Two implementations:
+  * Two implementations of the boundary query:
   *   - [[boundaries]]: literal parity — one global unpartitioned window.
   *     Exactly the reference's semantics AND its scalability hazard (the
   *     whole filtered table funnels through one task). Kept for parity tests.
-  *   - [[boundariesDistributed]]: the 100 TB formulation. Range-repartition on
-  *     the (totally ordered) sort key, compute per-partition row counts once
-  *     (a tiny O(#partitions) aggregate), broadcast the cumulative offsets
-  *     back, and derive the global row number as partition-local row_number +
-  *     offset. No single-task funnel; shuffle is one range exchange, identical
-  *     to what a global sort would need anyway. With a total order (tie-broken
-  *     by unique keys) the output is bit-identical to [[boundaries]] no matter
-  *     where the range partitioner cuts.
+  *   - [[boundariesDistributed]]: the 100 TB formulation. The global row
+  *     number comes from [[GlobalRank.withRank]] (one range-partitioned sort,
+  *     numbered by `zipWithIndex`), so no task holds more than one range
+  *     partition. With a total order (tie-broken by unique keys) the output
+  *     is bit-identical to [[boundaries]] no matter where the range
+  *     partitioner cuts.
   *
   * The JDBC scan plan ([[boundedScanIntervals]]) needs only the boundary
-  * VALUES, so it skips both: one read of the key column and an exact rank
-  * selection over it ([[valuesAtRanks]]).
+  * VALUES: one read of the key column and an exact rank selection over it
+  * ([[GlobalRank.valuesAtRanks]]).
   */
 object Chunking {
 
@@ -54,49 +51,18 @@ object Chunking {
       .orderBy(col(ts) +: tieBreak.map(col): _*)
   }
 
-  /** Scale-path equivalent of [[boundaries]]: distributed global row_number
-    * via range partitioning + per-partition offsets. Output is identical
-    * given a total order (ts + unique tiebreak).
-    *
-    * The counts and the numbering below both read `ranged`. Planned as two
-    * range exchanges, each samples its own cut points, so the two branches
-    * agree only when the engine happens to reuse one exchange for both (it
-    * did not over a cached input with AQE on). `ranged` is therefore
-    * materialized once, key columns only, with `__pid` stored: both
-    * branches read the same rows under the same partition ids. */
+  /** Scale-path equivalent of [[boundaries]]: the same rows, numbered by
+    * [[GlobalRank.withRank]] instead of a global window. Output is identical
+    * given a total order (ts + unique tiebreak). */
   def boundariesDistributed(df: DataFrame, ts: String, tieBreak: Seq[String],
                             chunkSize: Long, start: Long,
                             numPartitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
     val keys: Seq[Column] = col(ts) +: tieBreak.map(col)
-    val ord: Seq[Column] = keys.map(_.asc)
-    val n = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
-
     val filtered = df.filter(col(ts) > lit(start)).select(keys: _*)
-    val ranged = filtered
-      .repartitionByRange(n, ord: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
-
-    // Tiny metadata aggregate: #rows per range partition -> cumulative offset.
-    // O(#partitions) rows on the driver — the same cardinality the reference
-    // materializes for its boundary list, and broadcast-joined back.
-    val counts = ranged.groupBy("__pid").count()
-    val wOff = Window.orderBy("__pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts
-      .withColumn("__offset", coalesce(sum("count").over(wOff), lit(0L)))
-      .select("__pid", "__offset")
-
-    val wLocal = Window.partitionBy(col("__pid")).orderBy(ord: _*)
-    ranged
-      .withColumn("__local_rn", row_number().over(wLocal).cast("long"))
-      .join(broadcast(offsets), "__pid")
-      .withColumn("rownum", col("__local_rn") + col("__offset"))
+    GlobalRank.withRank(filtered, keys.map(_.asc), "rownum", numPartitions)
       .filter(col("rownum") % lit(chunkSize) === 0)
       .select(col(ts))
-      .orderBy(col(ts) +: tieBreak.map(col): _*)
+      .orderBy(keys: _*)
   }
 
   /** Interval zip (`agg_interval_zip`, SURVEY.md §2.3): consecutive boundary
@@ -125,39 +91,21 @@ object Chunking {
     * At the default 1M chunkSize the boundary set is tiny, but SCALE.md's
     * own arithmetic (100 TB / 1 KB rows, small chunks) puts it at ~10^8 rows,
     * where one global `Window.orderBy` funnels everything through one task.
-    * Same offsets trick as [[boundariesDistributed]]: range-partition the
-    * seeded boundary set, derive the global position from partition-local
-    * row_number + broadcast cumulative counts, and resolve each boundary's
-    * successor (`lead`) with a self-join on the derived position — every
-    * exchange is range- or hash-partitioned on boundary cardinality. Output
-    * is bit-identical to [[intervals]] (property-tested; same oracle).
-    * `ranged` is materialized once for the reason given at
-    * [[boundariesDistributed]]. */
+    * The seeded boundary set is numbered by [[GlobalRank.withRank]], and
+    * each boundary's successor (`lead`) is resolved with a self-join on that
+    * position — every exchange is range- or hash-partitioned on boundary
+    * cardinality. Output is bit-identical to [[intervals]] (property-tested;
+    * same oracle). */
   def intervalsDistributed(bounds: DataFrame, ts: String, start: Long,
                            sentinel: Long = GraftConfig.Sentinel,
                            numPartitions: Int = 0): DataFrame = {
     val spark = bounds.sparkSession
     import spark.implicits._
-    val n = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
     val seeded = bounds.select(col(ts).cast("long").as("b"))
       .unionAll(Seq(start).toDF("b"))
-    val ranged = seeded
-      .repartitionByRange(n, col("b").asc)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
-    val counts = ranged.groupBy("__pid").count()
-    val wOff = Window.orderBy("__pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts
-      .withColumn("__offset", coalesce(sum("count").over(wOff), lit(0L)))
-      .select("__pid", "__offset")
-    val wLocal = Window.partitionBy(col("__pid")).orderBy(col("b").asc)
-    val numbered = ranged
-      .withColumn("__local_rn", row_number().over(wLocal).cast("long"))
-      .join(broadcast(offsets), "__pid")
-      .select((col("__local_rn") + col("__offset") - 1).as("chunk_id"),
-        col("b").as("lo"))
+    val numbered = GlobalRank.withRank(seeded, Seq(col("b").asc), "__rank",
+        numPartitions)
+      .select((col("__rank") - 1).as("chunk_id"), col("b").as("lo"))
     // distributed lead(1): boundary at position i+1 is interval i's hi
     val next = numbered
       .select((col("chunk_id") - 1).as("chunk_id"), col("lo").as("hi"))
@@ -170,7 +118,7 @@ object Chunking {
   /** Interval zip that picks its physical form by boundary CARDINALITY:
     * below `smallThreshold` the parity form ([[intervals]]) — one window
     * over a provably tiny set, no exchanges worth scheduling; above it the
-    * distributed offsets form ([[intervalsDistributed]]), whose fixed
+    * distributed form ([[intervalsDistributed]]), whose fixed
     * multi-exchange overhead only pays for itself when the boundary set is
     * too big for one task (~10^8 boundaries at 100 TB with small chunks).
     * Both forms are bit-identical (property-tested), so the switch is pure
@@ -218,7 +166,8 @@ object Chunking {
     * starts at grid boundary `g·stride`, the key at rank
     * `g·stride·chunkSize`, so the coalesced boundaries are exactly the keys
     * at ranks that are multiples of `step = chunkSize·stride`. They are
-    * selected directly ([[valuesAtRanks]]) instead of building the grid:
+    * selected directly ([[GlobalRank.valuesAtRanks]]) instead of building
+    * the grid:
     *
     *   - the key column is read ONCE, as longs, into a local checkpoint.
     *     Later jobs read the checkpoint blocks; their lineage stops there,
@@ -252,22 +201,9 @@ object Chunking {
       val nChunks = n / cfg.chunkSize + 1
       val stride = math.max(1L,
         (nChunks + maxScanPartitions - 1) / maxScanPartitions.toLong)
-      val bounds = valuesAtRanks(keys, cfg.chunkSize * stride,
+      val bounds = GlobalRank.valuesAtRanks(keys, cfg.chunkSize * stride,
         df.sparkSession.sessionState.conf.numShufflePartitions)
       (cfg.startTime +: bounds).zip(bounds :+ cfg.effectiveEnd).toSeq
     } finally keys.unpersist(blocking = false)
-  }
-
-  /** Exact rank selection: the values at 1-based ranks `step, 2·step, …` of
-    * the ascending order of `values`, in order. One range-partitioned sort;
-    * `zipWithIndex` counts the sorted partitions and the selection reads the
-    * same shuffle output, so the counts and the numbering cannot disagree. */
-  private[operators] def valuesAtRanks(values: RDD[Long], step: Long,
-                                       numPartitions: Int): Array[Long] = {
-    require(step > 0, "step must be positive")
-    values.sortBy(identity, ascending = true, numPartitions)
-      .zipWithIndex()
-      .collect { case (v, i) if (i + 1) % step == 0 => v }
-      .collect()
   }
 }

@@ -15,11 +15,11 @@ import org.apache.spark.sql.functions._
   * ordering column, independent of partitioning.
   *
   * Scale shape: the naive formulation is a single global-window cumsum — one
-  * task at 100 TB. This one is the offsets trick from
-  * [[Chunking.boundariesDistributed]] with a DETERMINISTIC bucket key
-  * (id div bucketSize, not spark_partition_id): per-bucket window cumsums run
-  * in parallel, the per-bucket totals (corpus/bucketSize rows — tiny) cumsum
-  * once and broadcast back as offsets. No global window anywhere; output is
+  * task at 100 TB. This one splits the cumsum by a DETERMINISTIC bucket key
+  * (id div bucketSize): per-bucket window cumsums run in parallel, the
+  * per-bucket totals (corpus/bucketSize rows — tiny) cumsum once and
+  * broadcast back as offsets. The key is a value of the row, not a
+  * partition id, so every read of it sees the same buckets. No global window anywhere; output is
   * bit-identical to the naive form (same DuckDB oracle).
   */
 object Packing {

@@ -11,7 +11,7 @@ import graft.sources.Tables
   * composed from graft operators — the capstone parity query:
   *
   *   1. schema discovery            -> parquet/JDBC schema (authoritative)
-  *   2. chunk planning              -> Chunking.boundariesDistributed + intervals
+  *   2. chunk planning              -> Chunking.plan
   *   3. parallel partitioned scan   -> one scan + broadcast interval range
   *      join assigning each row its half-open chunk (parquet stand-in;
   *      JdbcPartitionedSource.read maps chunks to scan partitions directly)

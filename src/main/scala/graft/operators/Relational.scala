@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.GlobalRank
 import graft.sources.Tables
 
 /** Analytic operators over the star schema — the standard relational algebra
@@ -386,45 +387,26 @@ object Relational {
       .drop("__med", "__mad")
   }
 
-  /** Global row number over an ascending value order WITHOUT a global
-    * window: range repartition + per-partition local row_number + broadcast
-    * cumulative offsets (the Chunking.boundariesDistributed pattern).
-    * Emits the input columns plus `__rn` (1-based over the whole frame). */
-  private def globalRowNumber(df: DataFrame, v: String): DataFrame = {
-    val n = df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(n, col(v).asc)
-      .sortWithinPartitions(col(v).asc)
-      .withColumn("__pid", spark_partition_id())
-    val counts = ranged.groupBy("__pid").count()
-    val wOff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts
-      .withColumn("__off", coalesce(sum("count").over(wOff), lit(0L)))
-      .select("__pid", "__off")
-    val wLocal = Window.partitionBy(col("__pid")).orderBy(col(v).asc)
-    ranged.withColumn("__lrn", row_number().over(wLocal).cast("long"))
-      .join(broadcast(offsets), "__pid")
-      .withColumn("__rn", col("__lrn") + col("__off"))
-      .drop("__pid", "__lrn", "__off")
-  }
-
   /** Distributed EXACT percentiles, bit-identical to Spark's `percentile`
     * (and therefore to the DuckDB `quantile_cont` oracle, the equivalence
-    * `q_quantiles` proves): global order statistics via [[globalRowNumber]]
-    * — no single-buffer aggregation, no global window — then the two
-    * bracketing order statistics per requested fraction are picked by rank
-    * IN-PLAN (a 1-row count frame cross-joins in, the filter keeps <= 2
-    * rows per percentile) and interpolated with Percentile's exact formula
+    * `q_quantiles` proves): global order statistics via
+    * [[GlobalRank.withRank]] — no single-buffer aggregation, no global
+    * window — then the two bracketing order statistics per requested
+    * fraction are picked by rank IN-PLAN (a 1-row count frame cross-joins
+    * in, the filter keeps <= 2 rows per percentile) and interpolated with
+    * Percentile's exact formula
     * `(higher - pos) * v_lo + (pos - lower) * v_hi`, `pos = p * (n-1)`,
     * with the integral-rank special case returning the exact element.
     * Returns ONE row with a column per requested percentile name.
     * This is the form that survives 100 TB: per-task state is one
     * partition's sort, the driver never sees values, and the only
-    * broadcast is the partition-count offset table. */
+    * broadcast is the one-row count. */
   def exactPercentiles(vals: DataFrame, v: String,
                        ps: Seq[(String, Double)]): DataFrame = {
     val nonNull = vals.filter(col(v).isNotNull)
     val cnt = nonNull.agg(count(lit(1)).as("__n"))
-    val rn = globalRowNumber(nonNull, v).crossJoin(broadcast(cnt))
+    val rn = GlobalRank.withRank(nonNull.select(col(v)), Seq(col(v).asc), "__rn")
+      .crossJoin(broadcast(cnt))
     def pos(p: Double): Column = lit(p) * (col("__n") - 1).cast("double")
     def loIdx(p: Double): Column = floor(pos(p)).cast("long") + 1
     def hiIdx(p: Double): Column = ceil(pos(p)).cast("long") + 1

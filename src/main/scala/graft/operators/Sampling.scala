@@ -301,8 +301,8 @@ object Sampling {
     * shape) and a broadcast of the |strata|-row count relation. The
     * (vtime, stratum, rank) tuple IS the training order — the writer
     * range-partitions + sorts on it (the sort it pays anyway); an absolute
-    * position column would cost a global single-task window (the
-    * boundariesDistributed trap) and adds nothing the sort key lacks. */
+    * position column would cost a global single-task window (or a second
+    * global sort to number the rows) and adds nothing the sort key lacks. */
   def strideInterleave(df: DataFrame, keyCol: String, strataCol: String,
                        salt: String = "graft_mix_v1"): DataFrame = {
     val win = Window.partitionBy(strataCol)

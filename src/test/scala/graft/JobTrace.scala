@@ -10,9 +10,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
 import org.apache.spark.sql.SparkSession
 
 /** What a block of code ran, as a `SparkListener` saw it: the number of
-  * jobs, and the records read by each stage whose lineage holds a `JDBCRDD`
-  * (a read of the source database). */
-final case class JobTrace(jobs: Int, jdbcStageRecords: Seq[Long])
+  * jobs, the records read by each stage whose lineage holds a `JDBCRDD`
+  * (a read of the source database), and the number of stages that wrote
+  * shuffle records (a stage whose shuffle output is reused is skipped and
+  * not counted). */
+final case class JobTrace(jobs: Int, jdbcStageRecords: Seq[Long],
+                          shuffleWriteStages: Int)
 
 object JobTrace {
   private val Marker = "graft.JobTrace.marker"
@@ -24,6 +27,7 @@ object JobTrace {
     val sc = spark.sparkContext
     val jobs = new AtomicInteger
     val jdbc = new ConcurrentLinkedQueue[Long]
+    val shuffleWrites = new AtomicInteger
     val markerId = new AtomicInteger(-1)
     val flushed = new CountDownLatch(1)
     val listener = new SparkListener {
@@ -33,9 +37,13 @@ object JobTrace {
         else jobs.incrementAndGet()
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (e.jobId == markerId.get) flushed.countDown()
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val metrics = e.stageInfo.taskMetrics
         if (e.stageInfo.rddInfos.exists(_.name == "JDBCRDD"))
-          jdbc.add(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
+          jdbc.add(metrics.inputMetrics.recordsRead)
+        if (metrics.shuffleWriteMetrics.recordsWritten > 0)
+          shuffleWrites.incrementAndGet()
+      }
     }
     sc.addSparkListener(listener)
     try {
@@ -44,7 +52,7 @@ object JobTrace {
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setJobDescription(null)
       assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      (out, JobTrace(jobs.get, jdbc.asScala.toSeq))
+      (out, JobTrace(jobs.get, jdbc.asScala.toSeq, shuffleWrites.get))
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.util.Random
 import graft.SparkSpec
-import graft.core.{GraftConfig, HanaTypes}
+import graft.core.{GlobalRank, GraftConfig, HanaTypes}
 
 /** Property-style tests (SURVEY.md §5.3): the chunk-plan invariants of the
   * reference's algorithm (`HanaToBQ.java:150-172`) must hold for arbitrary
@@ -103,7 +103,7 @@ class ChunkingPropertySpec extends SparkSpec {
       val expected = (step to sorted.length.toLong by step).map(r => sorted((r - 1).toInt))
       Seq(1, 3, 7).foreach { parts =>
         val rdd = spark.sparkContext.parallelize(values, 4)
-        assert(Chunking.valuesAtRanks(rdd, step, parts).toSeq == expected)
+        assert(GlobalRank.valuesAtRanks(rdd, step, parts).toSeq == expected)
       }
     }
   }

@@ -1,7 +1,13 @@
 package graft.operators
 
+import org.apache.spark.ShuffleDependency
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.functions.SquaredDistances
@@ -13,6 +19,35 @@ class PlanSpec extends SparkSpec {
 
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  private object AqePlans extends AdaptiveSparkPlanHelper
+
+  private def tsLineitem: DataFrame = Tables.lineitem(spark, sf)
+    .withColumn("ts_epoch", col("l_shipdate").cast("timestamp").cast("long"))
+  private val tie = Seq("l_orderkey", "l_linenumber")
+  private val tsStart = 788918400L
+
+  /** The places where `df` funnels data rows through one task, however it
+    * computes them: an unpartitioned window or a single-partition exchange
+    * in its executed plan, or a shuffle into one partition anywhere in the
+    * lineage of its rows. The lineage also holds work done while the frame
+    * was built (an eager sort behind an RDD-backed frame). */
+  private def funnels(df: DataFrame): Seq[String] = {
+    df.collect() // finalize AQE
+    val nodes = AqePlans.collect(df.queryExecution.executedPlan) {
+      case w: WindowExec if w.partitionSpec.isEmpty => s"unpartitioned window: $w"
+      case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition =>
+        s"single-partition exchange: ${e.simpleString(200)}"
+    }
+    def shuffles(rdd: RDD[_]): Seq[ShuffleDependency[_, _, _]] =
+      rdd.dependencies.flatMap {
+        case d: ShuffleDependency[_, _, _] => d +: shuffles(d.rdd)
+        case d => shuffles(d.rdd)
+      }
+    val lineage = shuffles(df.rdd).filter(_.partitioner.numPartitions < 2)
+      .map(d => s"shuffle ${d.shuffleId} into one partition")
+    nodes ++ lineage
+  }
 
   test("q5 star join broadcasts every dimension (no shuffle join for dims)") {
     val p = plan(Relational.localSupplierVolume(spark, sf))
@@ -174,20 +209,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("distributed interval zip has no unpartitioned window") {
-    val li = Tables.lineitem(spark, sf)
-      .withColumn("ts_epoch", col("l_shipdate").cast("timestamp").cast("long"))
-    val b = Chunking.boundariesDistributed(li, "ts_epoch",
-      Seq("l_orderkey", "l_linenumber"), 100L, 788918400L)
-    val df = Chunking.intervalsDistributed(b, "ts_epoch", 788918400L)
-    df.collect() // finalize AQE
-    val p = plan(df)
-    // every Window in the plan is partitioned by __pid; the boundary-count
-    // offsets window runs over O(#partitions) rows, not the boundary set
-    val winLines = p.linesIterator.filter(_.contains("Window ")).toList
-    assert(winLines.nonEmpty)
-    winLines.filterNot(_.contains("__offset")).foreach { l =>
-      assert(l.contains("__pid"), s"unpartitioned window over data rows: $l")
-    }
+    val b = Chunking.boundariesDistributed(tsLineitem, "ts_epoch", tie, 100L, tsStart)
+    assert(funnels(Chunking.intervalsDistributed(b, "ts_epoch", tsStart)).isEmpty)
+    // the parity zip over the parity boundaries is what this rules out
+    val pb = Chunking.boundaries(tsLineitem, "ts_epoch", tie, 100L, tsStart)
+    assert(funnels(Chunking.intervals(pb, "ts_epoch", tsStart)).nonEmpty)
   }
 
   test("seq packing: data windows are bucket-partitioned; offsets window sees buckets only") {
@@ -325,16 +351,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("distributed boundaries avoid the global single-partition window") {
-    val li = Tables.lineitem(spark, sf)
-      .withColumn("ts_epoch", col("l_shipdate").cast("timestamp").cast("long"))
-    val pDist = plan(Chunking.boundariesDistributed(li, "ts_epoch",
-      Seq("l_orderkey", "l_linenumber"), 100L, 788918400L))
-    // parity version funnels through a single unpartitioned Window:
-    val pParity = plan(Chunking.boundaries(li, "ts_epoch",
-      Seq("l_orderkey", "l_linenumber"), 100L, 788918400L))
-    // the distributed one partitions its windows by __pid
-    assert(pDist.contains("__pid"))
-    assert(!pParity.contains("__pid"))
+    val dist = Chunking.boundariesDistributed(tsLineitem, "ts_epoch", tie, 100L, tsStart)
+    assert(funnels(dist).isEmpty)
+    // the parity version funnels through a single unpartitioned Window
+    val parity = Chunking.boundaries(tsLineitem, "ts_epoch", tie, 100L, tsStart)
+    assert(funnels(parity).nonEmpty)
   }
 
   test("q2 min-cost supplier: dims broadcast, min table joins back on partkey") {

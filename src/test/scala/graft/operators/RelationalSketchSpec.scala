@@ -79,4 +79,29 @@ class RelationalSketchSpec extends SparkSpec {
         s"group ${e.getString(0)}: got $r expected $e")
     }
   }
+
+  test("exactPercentiles over a cached, tie-heavy input bit-matches percentile()") {
+    // AQE on and 8 shuffle partitions: the setting in which separately
+    // planned count and numbering passes once disagreed over a cached input
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    // 200,000 values over 5,003 distinct: each value occurs ~40 times
+    val df = spark.range(0L, 200000L, 1L, 8)
+      .select((col("id") * 7919L % 5003L).cast("double").as("v"))
+      .cache()
+    try {
+      df.count()
+      for (p <- Seq(0.05, 0.5, 0.95)) {
+        val expected = df.agg(percentile(col("v"), lit(p))).head().getDouble(0)
+        val got = Relational.exactPercentiles(df, "v", Seq("q" -> p))
+          .head().getDouble(0)
+        assert(got == expected, s"p=$p: got $got expected $expected")
+      }
+    } finally {
+      df.unpersist()
+      saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
+  }
 }
