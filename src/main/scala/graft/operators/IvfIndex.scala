@@ -1,8 +1,12 @@
 package graft.operators
 
+import java.math.{BigDecimal => JBig}
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.Decimal
 
 import graft.functions.VectorFunctions
 
@@ -14,18 +18,17 @@ import graft.functions.VectorFunctions
   *   query: rank centroids per query, probe the nProbe nearest lists, exact
   *   cosine top-k over only those lists' members.
   *
-  * Scale shape: centroid MEANS aggregate the exploded (list, dim, v)
-  * table — a map-side-combined groupBy over nLists x dims groups, the
-  * honest training cost — while per-vector DISTANCES never explode-join:
-  * the (tiny) nLists x dims centroid matrix is collected and shipped as a
-  * literal, and [[graft.functions.SquaredDistances]] computes all nLists
-  * distances per vector in one fused kernel. The kernel runs once per
-  * VECTOR: Spark evaluates a `select`'s non-generator expressions AFTER
-  * the `Generate`, so [[centroidsFrom]] stages the list in a select of its
-  * own before exploding the embedding. The driver round-trip per Lloyd
-  * iteration (collect centroids -> literal) is the standard distributed
-  * k-means shape (centroid state is O(nLists x dims), independent of
-  * corpus size).
+  * Scale shape: each Lloyd step is ONE pass over the vectors with no
+  * shuffle (the MLlib k-means shape): a projection computes each vector's
+  * list and its components, and [[exactMeans]] sums them per (list, dim)
+  * in a `treeAggregate` whose state is the nLists x dims accumulator.
+  * Per-vector DISTANCES never explode-join: the (tiny) centroid matrix is
+  * shipped as a literal, and [[graft.functions.SquaredDistances]] computes
+  * all nLists distances per vector in one fused kernel, once per vector.
+  * Merging the sums and shipping the centroids back as a literal once per
+  * Lloyd iteration is the standard distributed k-means shape (centroid
+  * state is O(nLists x dims), independent of corpus size). Search is one
+  * narrow corpus scan as well (see [[topK]]).
   *
   * Determinism engineering (oracle-enforced): centroid means use
   * DECIMAL-exact component sums; squared-distance terms follow EXACTLY
@@ -37,48 +40,91 @@ import graft.functions.VectorFunctions
   */
 object IvfIndex {
 
-  private def exploded(emb: DataFrame, id: String): DataFrame =
-    emb.select(col(id), posexplode(col("embedding")).as(Seq("dim", "v")))
-      .withColumn("v", col("v").cast("double"))
+  /** Vectors with a null or empty embedding take part in nothing: they
+    * neither train, nor join as members, nor count in balances. */
+  private val nonEmpty = col("embedding").isNotNull && size(col("embedding")) > 0
 
-  /** (list, dim, c) centroids with the list computed INLINE — no join
-    * against a corpus-sized (vec_id -> list) relation, so the explode feeds
-    * the map-side-combined (nLists x d group) aggregate directly. `list` is
-    * staged in a select of its own BEFORE the explode: Spark evaluates a
-    * select's non-generator expressions in a `Project` after the
-    * `Generate`, where the list expression (the SquaredDistances kernel in
-    * every Lloyd step) would run once per exploded component, d times per
-    * vector, with the whole embedding copied into each row. Staged, it runs
-    * once per vector below the `Generate` (PlanSpec pins this shape). Exact
-    * decimal addition is order-free, so centroids (and every downstream
-    * assignment/probe) are bit-identical to the join form. */
-  private[operators] def centroidsFrom(emb: DataFrame, listCol: Column): DataFrame =
-    emb.select(listCol.as("list"), col("embedding"))
-      .select(col("list"), posexplode(col("embedding")).as(Seq("dim", "v")))
-      .withColumn("v", col("v").cast("double"))
-      .groupBy("list", "dim")
-      .agg((sum(col("v").cast("decimal(28,12)")).cast("double") /
-            count(lit(1))).as("c"))
+  /** The rows one Lloyd pass aggregates: `keys` (see [[exactMeans]]) and the
+    * components cast to `decimal(28,12)` through double, as the exploded
+    * `sum(cast(v as decimal(28,12)))` cast them. The key expression (the
+    * SquaredDistances kernel in every Lloyd step) runs once per vector in
+    * this `Project`, with no `Generate` (PlanSpec pins the shape). */
+  private[operators] def meansInput(emb: DataFrame, keys: Column): DataFrame =
+    emb.filter(nonEmpty).select(keys.cast("array<bigint>").as("keys"),
+      transform(col("embedding"), _.cast("double").cast("decimal(28,12)")).as("v"))
 
-  /** Collect the (nLists x dims — tiny, corpus-size-independent) centroid
-    * table into a packed matrix literal plus its list-id index. Lists are
-    * ordered by id; a list emptied by the Lloyd step simply drops out, which
-    * is why positions map back through `listIds` rather than assuming 0..n. */
-  private def collectMatrix(cents: DataFrame): (Column, Column) = {
-    val byList = cents.select("list", "dim", "c").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-    val listIds = byList.map(_._1)
-    val matrix = byList.map(_._2.sortBy(_._2).map(_._3).toSeq)
+  private type MeanAccs =
+    scala.collection.mutable.HashMap[(Int, Long), (Array[JBig], Array[Long])]
+
+  /** Adds n components (sums `x(i)`, counts `c(i)`) to the sums under `key`;
+    * a null sum is left out but its count is kept. */
+  private def addTo(accs: MeanAccs, key: (Int, Long), n: Int,
+                    x: Int => JBig, c: Int => Long): Unit = {
+    val (sums, counts) = accs.getOrElseUpdate(key, (new Array(n), new Array(n)))
+    require(sums.length == n, s"vector dim $n != ${sums.length} under key $key")
+    for (i <- 0 until n) {
+      if (x(i) != null) sums(i) = if (sums(i) == null) x(i) else sums(i).add(x(i))
+      counts(i) += c(i)
+    }
+  }
+
+  /** Exact component means in ONE pass with no shuffle. Segment `s` of a
+    * vector (dims `s * width` until `(s + 1) * width`; by default the whole
+    * vector) is summed under key `keys[s]`: IVF passes one key, the list,
+    * and PQ one code per subspace. `BigDecimal` addition is order-free, so
+    * the means do not depend on partitioning, and each is
+    * `sum.doubleValue / count` — Spark's `Decimal.toDouble` is
+    * `toBigDecimal.doubleValue`, so this equals the exploded form's
+    * `sum(...).cast("double") / count(lit(1))` bit for bit: a null
+    * component is left out of the sum but counted, and a total that does
+    * not fit `decimal(38,12)` raises the error Spark's `sum` raises. Dims
+    * beyond the last key and null keys count nowhere. Returns, per segment
+    * with any rows, the keys in ascending order and their centroid rows. */
+  private[operators] def exactMeans(emb: DataFrame, keys: Column,
+      width: Int = Int.MaxValue): Map[Int, (Seq[Long], Seq[Seq[Double]])] = {
+    val accs = meansInput(emb, keys).rdd.treeAggregate(new MeanAccs)(
+      (accs, row) => {
+        val (ks, v) = (row.getSeq[Any](0), row.getSeq[JBig](1))
+        var (s, from) = (0, 0)
+        while (s < ks.length && from < v.length) {
+          val until = if (v.length - from > width) from + width else v.length
+          if (ks(s) != null)
+            addTo(accs, (s, ks(s).asInstanceOf[Long]), until - from, i => v(from + i), _ => 1L)
+          s += 1
+          from = until
+        }
+        accs
+      },
+      (a, b) => {
+        b.foreach { case (k, (sums, counts)) => addTo(a, k, sums.length, sums(_), counts(_)) }
+        a
+      })
+    accs.toSeq.groupBy(_._1._1).map { case (seg, byKey) =>
+      val sorted = byKey.sortBy(_._1._2)
+      seg -> (sorted.map(_._1._2), sorted.map { case (key, (sums, counts)) =>
+        sums.indices.map { i =>
+          require(sums(i) != null, s"dim $i under key $key has no non-null value")
+          if (!Decimal(sums(i)).changePrecision(38, 12))
+            throw ColumnBridge.overflowInSumOfDecimalError()
+          sums(i).doubleValue / counts(i).toDouble
+        }
+      })
+    }
+  }
+
+  /** One Lloyd pass: centroids of the vectors grouped by `listCol`, as the
+    * packed (matrix, listIds) literals. Lists are ordered by id; a list
+    * emptied by the Lloyd step simply drops out, which is why positions
+    * map back through `listIds` rather than assuming 0..n. */
+  private def centroids(emb: DataFrame, listCol: Column): (Column, Column) = {
+    val (listIds, matrix) = exactMeans(emb, array(listCol))
+      .getOrElse(0, (Seq.empty[Long], Seq.empty[Seq[Double]]))
     (typedLit(matrix), typedLit(listIds))
   }
 
   /** DECIMAL-exact squared distance of every vector to every centroid:
     * (vec_id, list, dist2) — nLists rows per vector, single scan, no join.
-    * Takes the PRE-COLLECTED (matrix, listIds) literal pair so a centroid
-    * table consumed by several distance passes is aggregated and collected
-    * exactly once (collectMatrix is an eager action; calling it per consumer
-    * re-runs the whole upstream Lloyd lineage). */
+    * The exploded form [[assignmentsLegacy]] assigns with. */
   private def distances(emb: DataFrame, packed: (Column, Column)): DataFrame = {
     val (matrix, listIds) = packed
     emb.select(col("vec_id"),
@@ -89,21 +135,28 @@ object IvfIndex {
   }
 
   /** The pre-round-11 trainer+assignment path (exploded centroid join,
-    * windowed argmin), kept as the parity twin: IvfIndexParitySpec pins
+    * windowed argmin), kept as the parity twin: NearDupSimSpec pins
     * [[assignments]] identical to this on fixture data. */
   private[graft] def assignmentsLegacy(emb: DataFrame, nLists: Int = 8,
                                        nIters: Int = 1): DataFrame = {
-    def centroidsJoin(ve: DataFrame, assign: DataFrame): DataFrame =
-      ve.join(assign, "vec_id")
+    def centroidsJoin(ve: DataFrame, assign: DataFrame): (Column, Column) = {
+      val byList = ve.join(assign, "vec_id")
         .groupBy("list", "dim")
         .agg((sum(col("v").cast("decimal(28,12)")).cast("double") /
               count(lit(1))).as("c"))
-    val ve = exploded(emb, "vec_id")
+        .collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
+        .groupBy(_._1).toSeq.sortBy(_._1)
+      (typedLit(byList.map(_._2.sortBy(_._2).map(_._3).toSeq)),
+        typedLit(byList.map(_._1)))
+    }
+    val ve = emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
+      .withColumn("v", col("v").cast("double"))
     val seed = emb.select(col("vec_id"),
       pmod(col("vec_id"), lit(nLists.toLong)).as("list"))
-    var cents = collectMatrix(centroidsJoin(ve, seed))
+    var cents = centroidsJoin(ve, seed)
     (1 to nIters).foreach { _ =>
-      cents = collectMatrix(centroidsJoin(ve, argmin(distances(emb, cents))))
+      cents = centroidsJoin(ve, argmin(distances(emb, cents)))
     }
     argmin(distances(emb, cents))
   }
@@ -116,16 +169,16 @@ object IvfIndex {
   }
 
   /** Seed partition + `nIters` Lloyd refinements; returns the packed final
-    * centroid literals. Each iteration is one distance scan + one centroid
-    * aggregation + one O(nLists x dims) driver collect — the standard
-    * distributed k-means loop; cost is linear in iterations, corpus scanned
-    * once per iteration, centroid state independent of corpus size. */
+    * centroid literals. Each iteration is one shuffle-free pass over the
+    * vectors (list + exact sums, [[exactMeans]]) + one O(nLists x dims)
+    * merge — the standard distributed k-means loop; cost is linear
+    * in iterations, corpus scanned once per iteration, centroid state
+    * independent of corpus size. */
   private def lloyd(emb: DataFrame, nLists: Int,
                     nIters: Int): (Column, Column) = {
-    var cents = collectMatrix(
-      centroidsFrom(emb, pmod(col("vec_id"), lit(nLists.toLong))))
+    var cents = centroids(emb, pmod(col("vec_id"), lit(nLists.toLong)))
     (1 to nIters).foreach { _ =>
-      cents = collectMatrix(centroidsFrom(emb, listExpr(cents)))
+      cents = centroids(emb, listExpr(cents))
     }
     cents
   }
@@ -202,29 +255,7 @@ object IvfIndex {
     // claim that parallelism explicitly or it serializes on one core.
     val e = graft.core.Parallelism.forCompute(emb)
     val cents = coarse(e, nLists, nIters, memoKey)
-    e.filter(col("embedding").isNotNull && size(col("embedding")) > 0)
-      .select(col("vec_id"), listExpr(cents).as("list"))
-  }
-
-  /** The coarse-quantizer outputs both IVF consumers need: per-query probe
-    * lists (`q_id`, `list` — the nProbe nearest) and the full-corpus
-    * inverted-list assignment (`vec_id`, `list`). Shared by [[topK]] (exact
-    * re-rank) and [[PqIndex.ivfpqTopK]] (ADC re-rank over compressed codes);
-    * the centroid matrix is collected ONCE inside lloyd() and both frames
-    * consume the same packed literal. */
-  private[operators] def probeAndAssign(emb: DataFrame, nQueries: Int,
-      nLists: Int, nProbe: Int, nIters: Int,
-      memoKey: Option[String] = None): (DataFrame, DataFrame) = {
-    val e = graft.core.Parallelism.forCompute(emb)
-    val finalCents = coarse(e, nLists, nIters, memoKey)
-    // null/empty embeddings DROPPED, same as [[assignments]] — without the
-    // filter this path would emit list=null member rows (benign for the
-    // probe join but divergent degenerate-input semantics) and an empty
-    // array would throw inside the distance kernel
-    val finalAssign = e
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
-      .select(col("vec_id"), listExpr(finalCents).as("list"))
-    (probes(emb, finalCents, nQueries, nProbe), finalAssign)
+    e.filter(nonEmpty).select(col("vec_id"), listExpr(cents).as("list"))
   }
 
   /** Train the coarse quantizer and return the packed (matrix, listIds)
@@ -234,15 +265,23 @@ object IvfIndex {
       nIters: Int, memoKey: Option[String] = None): (Column, Column) =
     coarse(graft.core.Parallelism.forCompute(emb), nLists, nIters, memoKey)
 
-  /** Per-query nProbe nearest lists under pre-trained centroids. The window
-    * input is nQueries x nLists rows — driver-bounded, never corpus-sized. */
+  /** Per-query probes under pre-trained centroids: (q_id, probe, list,
+    * q_emb), one row for each of the query's nProbe nearest lists, `probe`
+    * being its 1-based rank. The query's distances pair with their list ids
+    * as structs, and `array_sort` orders them by distance, then list id
+    * (the `ORDER BY dist2, list` a window would apply), so probing needs no
+    * window and no shuffle. A query's probed lists are distinct. */
   private[operators] def probes(emb: DataFrame, finalCents: (Column, Column),
                                 nQueries: Int, nProbe: Int): DataFrame = {
-    val qd = distances(emb.filter(col("vec_id") < nQueries), finalCents)
-    val wProbe = Window.partitionBy("vec_id").orderBy(col("dist2").asc, col("list").asc)
-    qd.withColumn("__rn", row_number().over(wProbe))
-      .filter(col("__rn") <= nProbe)
-      .select(col("vec_id").as("q_id"), col("list"))
+    val (matrix, listIds) = finalCents
+    val byDist = array_sort(zip_with(
+      VectorFunctions.squared_distances(col("embedding"), matrix), listIds,
+      (d, l) => struct(d.as("dist2"), l.as("list"))))
+    emb.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+        posexplode(slice(byDist, 1, nProbe)).as(Seq("pos", "p")))
+      .select(col("q_id"), (col("pos") + 1).as("probe"), col("p.list").as("list"),
+        col("q_emb"))
   }
 
   /** Fused narrow coarse-list assignment: all nLists squared distances in one
@@ -256,30 +295,35 @@ object IvfIndex {
     element_at(listIds, array_position(ds, array_min(ds)).cast("int"))
   }
 
+  /** Probed corpus members with their exact cosine: every non-empty vector
+    * is scanned ONCE with its list (`n_id`, `list`, `n_emb`), joins the
+    * broadcast probes on `list` and is scored against the probing query.
+    * Each member is in exactly one list and a query's probed lists are
+    * distinct, so each (q_id, n_id) pair occurs once: no member join, no
+    * `distinct`, no join back to the embeddings. `extra` columns of `e`
+    * ride along with the member. */
+  private[operators] def probedMembers(e: DataFrame, cents: (Column, Column),
+      probed: DataFrame, extra: Column*): DataFrame =
+    e.filter(nonEmpty)
+      .select(Seq(col("vec_id").as("n_id"), listExpr(cents).as("list"),
+        col("embedding").as("n_emb")) ++ extra: _*)
+      .join(broadcast(probed), "list")
+      .filter(col("q_id") =!= col("n_id"))
+      .withColumn("cos", Similarity.cosine(col("q_emb"), col("n_emb")))
+
   /** IVF top-k: probe the nProbe nearest lists per query, exact cosine
-    * re-rank within them. */
+    * re-rank within them — one narrow corpus scan into the broadcast probe
+    * join ([[probedMembers]]), then `row_number` over
+    * (q_id ORDER BY cos DESC, n_id ASC) <= k. Spark plans that rank limit
+    * as a partial `WindowGroupLimit` below the q_id exchange, so only k
+    * candidates per query per task shuffle (PlanSpec pins it). */
   def topK(emb: DataFrame, nQueries: Int = 8, k: Int = 5,
            nLists: Int = 8, nProbe: Int = 2, nIters: Int = 1,
            memoKey: Option[String] = None): DataFrame = {
-    val (probes, finalAssign) =
-      probeAndAssign(emb, nQueries, nLists, nProbe, nIters, memoKey)
-
-    val members = finalAssign.select(col("vec_id").as("n_id"), col("list"))
-    val qEmb = emb.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      .filter(col("q_id") < nQueries)
-    val nEmb = emb.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
-
-    // the probe table is nQueries x nProbe rows — driver-bounded by
-    // construction — but it sits behind windows where size estimation
-    // drifts (and a cached corpus fragment shifts it further): hint the
-    // broadcast so unprobed members never shuffle for this join
-    val cand = broadcast(probes).join(members, "list")
-      .filter(col("q_id") =!= col("n_id"))
-      .select("q_id", "n_id").distinct()
-      .join(broadcast(qEmb), "q_id")
-      .join(nEmb, "n_id")
+    val e = graft.core.Parallelism.forCompute(emb)
+    val cents = coarse(e, nLists, nIters, memoKey)
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id").asc)
-    cand.withColumn("cos", Similarity.cosine(col("q_emb"), col("n_emb")))
+    probedMembers(e, cents, probes(emb, cents, nQueries, nProbe))
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
       .select("q_id", "rk", "n_id", "cos")
@@ -309,7 +353,6 @@ object IvfIndex {
     // pollute the memo with subset state under the same key.
     val h = graft.core.Parallelism.forCompute(history).persist()
     val coarse = trainCoarse(h, nLists, nIters)
-    val nonEmpty = col("embedding").isNotNull && size(col("embedding")) > 0
     val hCounts = h.filter(nonEmpty).select(listExpr(coarse).as("list"))
       .groupBy("list").agg(count(lit(1)).as("n_history"))
     val bCounts = graft.core.Parallelism.forCompute(batch)
@@ -331,38 +374,23 @@ object IvfIndex {
     * the next probe buy?"), measured from the deployed index itself rather
     * than guessed.
     *
-    * One training, one candidate pass: each (query, member) candidate
-    * carries the MINIMUM probe rank that reaches it (`min(probe_rank)` over
-    * its member lists), so "candidates at depth p" is a filter, not a
-    * re-probe — the nProbes axis explodes AFTER cosine scoring and ranks in
-    * a single window over (n_probe, q_id). Recall joins are id-only; the
-    * report is nProbes x nQueries rows. Exact arithmetic throughout
-    * (n_hit / k is one IEEE division — engine-identical). */
+    * One training, one candidate pass: probing to the deepest depth, each
+    * (query, member) candidate carries the rank of the probe that reached
+    * it (a member is in one list, so that rank is its first probe), and
+    * "candidates at depth p" is a filter, not a re-probe — the nProbes axis
+    * explodes AFTER cosine scoring and ranks in a single window over
+    * (n_probe, q_id). Recall joins are id-only; the report is nProbes x
+    * nQueries rows. Exact arithmetic throughout (n_hit / k is one IEEE
+    * division — engine-identical). */
   def recallReport(emb: DataFrame, nQueries: Int = 8, k: Int = 5,
                    nLists: Int = 8, nProbes: Seq[Int] = Seq(1, 2, 4, 8),
                    nIters: Int = 1, memoKey: Option[String] = None): DataFrame = {
     require(nProbes.nonEmpty && nProbes.forall(_ >= 1), "need probe depths >= 1")
     val e = graft.core.Parallelism.forCompute(emb)
     val finalCents = coarse(e, nLists, nIters, memoKey)
-    // null/empty embeddings DROPPED, same as [[assignments]]/[[probeAndAssign]]
-    val finalAssign = e
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
-      .select(col("vec_id"), listExpr(finalCents).as("list"))
-    val wProbe = Window.partitionBy("vec_id").orderBy(col("dist2").asc, col("list").asc)
-    val ranked = distances(emb.filter(col("vec_id") < nQueries), finalCents)
-      .withColumn("probe_rank", row_number().over(wProbe))
-      .select(col("vec_id").as("q_id"), col("list"), col("probe_rank"))
-    val members = finalAssign.select(col("vec_id").as("n_id"), col("list"))
-    val qEmb = emb.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      .filter(col("q_id") < nQueries)
-    val nEmb = emb.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
-    val scored = broadcast(ranked).join(members, "list")
-      .filter(col("q_id") =!= col("n_id"))
-      .groupBy("q_id", "n_id").agg(min("probe_rank").as("first_probe"))
-      .join(broadcast(qEmb), "q_id")
-      .join(nEmb, "n_id")
-      .withColumn("cos", Similarity.cosine(col("q_emb"), col("n_emb")))
-      .select("q_id", "n_id", "first_probe", "cos")
+    val scored = probedMembers(e, finalCents,
+        probes(emb, finalCents, nQueries, nProbes.max))
+      .select(col("q_id"), col("n_id"), col("probe").as("first_probe"), col("cos"))
     val pAxis = explode(array(nProbes.map(lit): _*)).as("n_probe")
     val w = Window.partitionBy("n_probe", "q_id")
       .orderBy(col("cos").desc, col("n_id").asc)

@@ -17,8 +17,9 @@ import graft.functions.VectorFunctions
   * centroid means -> Lloyd refinement with DECIMAL-exact squared distances
   * ([[graft.functions.SquaredDistances]] on the subvector slice), so code
   * assignments are identical across engines and partitionings. Codebook
-  * state is O(M x K x subDim) — driver-collected per Lloyd step like any
-  * distributed k-means; corpus scanned once per iteration.
+  * state is O(M x K x subDim) — merged once per Lloyd step like any
+  * distributed k-means; corpus scanned once per iteration, with no
+  * join and no shuffle.
   *
   * Encoding is a pure narrow map: per vector, M fused distance kernels over
   * broadcast codebook literals + argmin — no join, no shuffle, no explode.
@@ -28,36 +29,6 @@ object PqIndex {
   val M = 8       // subspaces
   val SubDim = 8  // dims per subspace (M * SubDim = embedding dim)
   val K = 16      // codes per subspace (one nibble)
-
-  /** (vec_id, s, subdim, v) — subspace-tagged exploded components. */
-  private def exploded(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
-      .select(col("vec_id"),
-        expr(s"cast(dim div $SubDim as int)").as("s"),
-        pmod(col("dim"), lit(SubDim)).cast("int").as("subdim"),
-        col("v").cast("double").as("v"))
-
-  /** Per-(subspace, code) centroid means from an assignment (vec_id, s, code),
-    * DECIMAL-exact like [[IvfIndex]]. */
-  private def centroids(ve: DataFrame, assign: DataFrame): DataFrame =
-    ve.join(assign, Seq("vec_id", "s"))
-      .groupBy("s", "code", "subdim")
-      .agg((sum(col("v").cast("decimal(28,12)")).cast("double") /
-            count(lit(1))).as("c"))
-
-  /** Collect the (M x K x SubDim — tiny) codebook into per-subspace packed
-    * (matrix, codeIds) literals; a code emptied by a Lloyd step drops out,
-    * so positions map back through codeIds. */
-  private def collectCodebooks(cents: DataFrame): Seq[(Column, Column)] = {
-    val rows = cents.select("s", "code", "subdim", "c").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
-    (0 until M).map { s =>
-      val byCode = rows.filter(_._1 == s).groupBy(_._2).toSeq.sortBy(_._1)
-      val codeIds = byCode.map(_._1)
-      val matrix = byCode.map(_._2.sortBy(_._3).map(_._4).toSeq)
-      (typedLit(matrix), typedLit(codeIds))
-    }
-  }
 
   /** Per-subspace nearest-code expressions: fused decimal-exact distances
     * over the subvector slice, argmin with first-position (= smallest code,
@@ -69,24 +40,27 @@ object PqIndex {
       element_at(packed(s)._2, array_position(ds, array_min(ds)).cast("int"))
     }
 
-  /** (vec_id, s, code) assignment rows under the given codebooks. */
-  private def assignRows(emb: DataFrame, packed: Seq[(Column, Column)]): DataFrame =
-    emb.select(col("vec_id"),
-      posexplode(array(codeExprs(packed): _*)).as(Seq("s", "code")))
-
   /** Seed partition + `nIters` Lloyd refinements per subspace; returns the
-    * packed per-subspace codebook literals. Callers pass an already
-    * compute-partitioned frame ([[graft.core.Parallelism.forCompute]]) — a
-    * small parquet file arrives as ONE split, which would serialize the
-    * explode + fused distance kernels onto a single core. */
+    * packed per-subspace codebook literals. Each step is ONE pass with no
+    * join and no shuffle: a vector's M codes key the exact sums of its M
+    * subvectors ([[IvfIndex.exactMeans]] with `width` = SubDim), and a code
+    * emptied by a Lloyd step drops out, so positions map back through
+    * codeIds. Callers pass an already compute-partitioned frame
+    * ([[graft.core.Parallelism.forCompute]]) — a small parquet file arrives
+    * as ONE split, which would serialize the fused distance kernels onto a
+    * single core. */
   private[operators] def train(emb: DataFrame, nIters: Int): Seq[(Column, Column)] = {
-    val ve = exploded(emb)
-    val seed = emb
-      .select(col("vec_id"), explode(sequence(lit(0), lit(M - 1))).as("s"))
-      .withColumn("code", pmod(col("vec_id"), lit(K.toLong)))
-    var packed = collectCodebooks(centroids(ve, seed))
+    def codebooks(codes: Seq[Column]): Seq[(Column, Column)] = {
+      val means = IvfIndex.exactMeans(emb, array(codes: _*), SubDim)
+      (0 until M).map { s =>
+        val (codeIds, matrix) =
+          means.getOrElse(s, (Seq.empty[Long], Seq.empty[Seq[Double]]))
+        (typedLit(matrix), typedLit(codeIds))
+      }
+    }
+    var packed = codebooks(Seq.fill(M)(pmod(col("vec_id"), lit(K.toLong))))
     (1 to nIters).foreach { _ =>
-      packed = collectCodebooks(centroids(ve, assignRows(emb, packed)))
+      packed = codebooks(codeExprs(packed))
     }
     packed
   }
@@ -185,28 +159,6 @@ object PqIndex {
       .withColumn("pq_code",
         (0 until M).map(s => shiftleft(col(s"code_$s"), 4 * s)).reduce(_ + _))
       .orderBy("vec_id")
-  }
-
-  /** Test-only probe: (s, code_of_nId, lut_dist2_string) per subspace for
-    * one (query, neighbor) pair — used to localize cross-engine decimal
-    * drift. */
-  private[operators] def debugTerms(emb: DataFrame, qId: Long,
-                                    nId: Long): Seq[(Int, Long, String)] = {
-    val packed = train(emb, 1)
-    val cs = codeExprs(packed).zipWithIndex
-      .map { case (c, s) => c.cast("long").as(s"code_$s") }
-    val codes = emb.filter(col("vec_id") === nId)
-      .select(col("vec_id") +: cs: _*).collect()(0)
-    (0 until M).map { s =>
-      val code = codes.getAs[Long](s"code_$s")
-      val lut = emb.filter(col("vec_id") === qId).select(
-        element_at(
-          VectorFunctions.squared_distances(
-            slice(col("embedding"), s * SubDim + 1, SubDim), packed(s)._1),
-          array_position(packed(s)._2, lit(code)).cast("int"))
-          .cast("string")).collect()(0).getString(0)
-      (s, code, lut)
-    }
   }
 
   /** RESIDUAL product quantization — the storage form real IVF-PQ indexes
@@ -316,17 +268,6 @@ object PqIndex {
       .orderBy("q_id", "rk")
   }
 
-  /** IVF-PQ — the composed billion-scale ANN index: the IVF coarse
-    * quantizer prunes the corpus to the nProbe probed lists per query, and
-    * ADC scores only those members over their 4-byte PQ codes. One narrow
-    * corpus scan computes both the coarse list (fused argmin over the
-    * broadcast centroid matrix — [[IvfIndex.listExpr]]) and the M nibble
-    * codes; probed membership is a broadcast join against the
-    * O(nQueries x nProbe) probe table, so unprobed corpus rows never leave
-    * their scan task; selection is the same bounded-heap partial aggregate
-    * as [[adcTopK]]. Both trainings are decimal-exact, so the composition
-    * is bit-identical across engines — the oracle chains the existing IVF
-    * and PQ CTE lineages. */
   /** Residual IVF-PQ search — FAISS `IndexIVFPQ`'s ACTUAL query path,
     * composing [[residualCodes]] (storage) with ADC (search): corpus rows
     * carry their coarse list + codes of the residual `v - c_list`; a query
@@ -345,8 +286,8 @@ object PqIndex {
   def ivfrpqTopK(emb: DataFrame, nQueries: Int = 8, k: Int = 5,
                  nLists: Int = 8, nProbe: Int = 2, nIters: Int = 1,
                  coarseMemoKey: Option[String] = None): DataFrame = {
-    // persisted: feeds the coarse collects, the residual codebook collects,
-    // the probe window, and the final scan (see ivfpqTopK's rationale)
+    // persisted: feeds the coarse and residual codebook training passes,
+    // the probes, and the final scan (see ivfpqTopK's rationale)
     val e = graft.core.Parallelism.forCompute(emb).persist()
     val coarse @ (matrix, listIds) =
       IvfIndex.trainCoarse(e, nLists, nIters, coarseMemoKey)
@@ -362,11 +303,9 @@ object PqIndex {
       VectorFunctions.squared_distances(
         slice(col("qresid"), s * SubDim + 1, SubDim), packed(s)._1)
     }: _*)
-    val qluts = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding"))
-      .join(IvfIndex.probes(e, coarse, nQueries, nProbe), "q_id")
+    val qluts = IvfIndex.probes(e, coarse, nQueries, nProbe)
       .select(col("q_id"), col("list"),
-        zip_with(col("embedding").cast("array<double>"), element_at(matrix, lpos),
+        zip_with(col("q_emb").cast("array<double>"), element_at(matrix, lpos),
           (x, c) => x - c).as("qresid"))
       .select(col("q_id"), col("list"), luts.as("luts"))
     val scored = corpus
@@ -376,50 +315,28 @@ object PqIndex {
     minKSelect(scored, k)
   }
 
-  private[graft] def debugRpqTerms(emb: DataFrame, qId: Long,
-                                   nId: Long): Seq[String] = {
-    val e = graft.core.Parallelism.forCompute(emb).persist()
-    val coarse @ (matrix, listIds) = IvfIndex.trainCoarse(e, 8, 1)
-    val ds = VectorFunctions.squared_distances(col("embedding"), matrix)
-    val pos = array_position(ds, array_min(ds)).cast("int")
-    val rframe = e.select(
-      col("vec_id"),
-      element_at(listIds, pos).as("list"),
-      zip_with(col("embedding").cast("array<double>"), element_at(matrix, pos),
-        (x, c) => x - c).as("embedding"))
-    val packed = train(rframe, 1)
-    val cs = codeExprs(packed).zipWithIndex
-      .map { case (c, s) => c.cast("long").as(s"code_$s") }
-    val codesRow = rframe.filter(col("vec_id") === nId)
-      .select(col("list") +: cs: _*).collect()(0)
-    val nList = codesRow.getLong(0)
-    val lpos = array_position(listIds, lit(nList)).cast("int")
-    val qresid = e.filter(col("vec_id") === qId)
-      .select(zip_with(col("embedding").cast("array<double>"), element_at(matrix, lpos),
-        (x, c) => x - c).as("qresid"))
-    (0 until M).map { s =>
-      val code = codesRow.getLong(s + 1)
-      val term = qresid.select(
-        element_at(
-          VectorFunctions.squared_distances(
-            slice(col("qresid"), s * SubDim + 1, SubDim), packed(s)._1),
-          array_position(packed(s)._2, lit(code)).cast("int")).cast("string"))
-        .collect()(0).getString(0)
-      s"s=$s code=$code list=$nList term=$term"
-    }
-  }
-
+  /** IVF-PQ — the composed billion-scale ANN index: the IVF coarse
+    * quantizer prunes the corpus to the nProbe probed lists per query, and
+    * ADC scores only those members over their 4-byte PQ codes. One narrow
+    * corpus scan computes both the coarse list (fused argmin over the
+    * broadcast centroid matrix — [[IvfIndex.listExpr]]) and the M nibble
+    * codes; probed membership is a broadcast join against the
+    * O(nQueries x nProbe) probe table, so unprobed corpus rows never leave
+    * their scan task; selection is the same bounded-heap partial aggregate
+    * as [[adcTopK]]. Both trainings are decimal-exact, so the composition
+    * is bit-identical across engines — the oracle chains the existing IVF
+    * and PQ CTE lineages. */
   def ivfpqTopK(emb: DataFrame, nQueries: Int = 8, k: Int = 5,
                 nLists: Int = 8, nProbe: Int = 2, nIters: Int = 1,
                 coarseMemoKey: Option[String] = None): DataFrame = {
-    // persisted: the frame feeds FOUR training actions (two coarse collects,
-    // two codebook collects) plus the final scan — each would otherwise
-    // re-run the scan lineage; embeddings are the training input and
-    // training state is O(centroids), so this is the one cache that pays
-    // for itself (the bench harness unpersists after each query)
+    // persisted: the frame feeds FOUR training passes (two coarse, two
+    // codebook) plus the final scan — each would otherwise re-run the scan
+    // lineage; embeddings are the training input and training state is
+    // O(centroids), so this is the one cache that pays for itself (the
+    // bench harness unpersists after each query)
     val e = graft.core.Parallelism.forCompute(emb).persist()
     val coarse = IvfIndex.trainCoarse(e, nLists, nIters, coarseMemoKey)
-    val probes = IvfIndex.probes(e, coarse, nQueries, nProbe)
+    val probes = IvfIndex.probes(e, coarse, nQueries, nProbe).select("q_id", "list")
     val packed = trainShared(e, nIters, "raw", coarseMemoKey)
     val cs = codeExprs(packed).zipWithIndex
       .map { case (c, s) => c.cast("long").as(s"code_$s") }

@@ -349,30 +349,20 @@ object Similarity {
     * mining batch. Hard negatives are by definition NEAR the anchor, which
     * is exactly the regime where IVF recall is high (the same argument as
     * ANN search; recall asserted vs the brute form in `NearDupSimSpec`).
-    * Candidate exchange carries ids only; embeddings rejoin from the base
-    * scan per side. */
+    * The corpus is scanned once: members carry their list and label into
+    * the broadcast probe join ([[IvfIndex.probedMembers]]). */
   def hardNegativesIvf(emb: DataFrame, nQueries: Int = 8, k: Int = 5,
                        nLists: Int = 8, nProbe: Int = 2, nIters: Int = 1,
                        coarseMemoKey: Option[String] = None): DataFrame = {
-    val (probes, finalAssign) =
-      IvfIndex.probeAndAssign(emb, nQueries, nLists, nProbe, nIters,
-        coarseMemoKey)
-    val members = finalAssign.select(col("vec_id").as("n_id"), col("list"))
-    val q = emb.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("label").as("q_label"))
+    val e = graft.core.Parallelism.forCompute(emb)
+    val cents = IvfIndex.trainCoarse(e, nLists, nIters, coarseMemoKey)
+    val qLabel = emb.select(col("vec_id").as("q_id"), col("label").as("q_label"))
       .filter(col("q_id") < nQueries)
-    val n = emb.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
-      col("label").as("n_label"))
-    // probe table is driver-bounded (nQueries x nProbe) — broadcast it
-    // so unprobed members never shuffle for this join
-    val cand = broadcast(probes).join(members, "list")
-      .filter(col("q_id") =!= col("n_id"))
-      .select("q_id", "n_id").distinct()
-      .join(broadcast(q), "q_id")
-      .join(n, "n_id")
-      .filter(col("q_label") =!= col("n_label"))
+    val probed = IvfIndex.probes(emb, cents, nQueries, nProbe)
+      .join(broadcast(qLabel), "q_id")
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id").asc)
-    cand.withColumn("cos", cosine(col("q_emb"), col("n_emb")))
+    IvfIndex.probedMembers(e, cents, probed, col("label").as("n_label"))
+      .filter(col("q_label") =!= col("n_label"))
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
       .select("q_id", "q_label", "rk", "n_id", "n_label", "cos")

@@ -20,4 +20,12 @@ object ColumnBridge {
     * message — error class and condition are identical. */
   def divideByZeroError(): ArithmeticException =
     org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
+
+  /** `QueryExecutionErrors.overflowInSumOfDecimalError`, re-exported so
+    * graft.operators.IvfIndex.exactMeans, which sums decimals outside
+    * Spark's `sum`, fails with the ARITHMETIC_OVERFLOW error that `sum`
+    * raises when a total leaves its result type. */
+  def overflowInSumOfDecimalError(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors
+      .overflowInSumOfDecimalError(null, "try_sum")
 }

@@ -3,11 +3,14 @@ package graft.operators
 import org.apache.spark.ShuffleDependency
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LeafNode,
+  LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.execution.window.{Partial, WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.functions.SquaredDistances
@@ -545,24 +548,52 @@ class PlanSpec extends SparkSpec {
     assert(!ph.contains("Join"), ph.take(2000))
   }
 
-  test("IVF Lloyd step: squared_distances runs beneath the explode, once per vector") {
-    // a select mixing a generator with other expressions plans those
-    // expressions ABOVE the Generate, where they run once per exploded
-    // component; the centroid frame must keep the kernel below it
+  test("IVF Lloyd pass: squared_distances runs once per vector, with no Generate") {
+    // a Generate below the kernel's node would run it once per exploded
+    // component; the pass aggregates whole vectors, so there is none, and
+    // the kernel sits only in a Project over the (filtered) vector rows
     val cents = (typedLit(Seq(Seq.fill(4)(0.0), Seq.fill(4)(1.0))),
       typedLit(Seq(0L, 1L)))
-    val p = IvfIndex.centroidsFrom(Tables.embeddings(spark, sf),
-      IvfIndex.listExpr(cents)).queryExecution.optimizedPlan
+    val p = IvfIndex.meansInput(Tables.embeddings(spark, sf),
+      array(IvfIndex.listExpr(cents))).queryExecution.optimizedPlan
     def kernel(n: LogicalPlan): Boolean =
       n.expressions.exists(_.exists(_.isInstanceOf[SquaredDistances]))
-    // the Generate itself and every node above it
-    def notBelow(n: LogicalPlan): Seq[LogicalPlan] = n match {
-      case g: Generate => Seq(g)
-      case o => o +: o.children.flatMap(notBelow)
+    assert(p.collect { case g: Generate => g }.isEmpty, p.treeString)
+    val withKernel = p.collect { case n if kernel(n) => n }
+    assert(withKernel.nonEmpty, p.treeString)
+    assert(withKernel.forall {
+      case pr: Project => !pr.child.exists {
+        case _: Filter | _: Project | _: LeafNode => false
+        case _ => true
+      }
+      case _ => false
+    }, p.treeString)
+  }
+
+  test("IVF topK: no probe window, no (q_id, n_id) aggregate, partial rank limit " +
+    "below the q_id exchange") {
+    val df = IvfIndex.topK(Tables.embeddings(spark, sf), nQueries = 8, k = 5)
+    df.collect() // finalize AQE
+    val plan = df.queryExecution.executedPlan
+    def names(es: Seq[Expression]): Seq[String] =
+      es.flatMap(_.references.map(_.name))
+    // the one window ranks candidates per query; probes are an array_sort
+    val windows = AqePlans.collect(plan) { case w: WindowExec => w }
+    assert(windows.nonEmpty && windows.forall(w => names(w.partitionSpec) == Seq("q_id")),
+      plan.treeString)
+    val pairAggs = AqePlans.collect(plan) {
+      case h: HashAggregateExec if names(h.groupingExpressions).toSet ==
+        Set("q_id", "n_id") => h
     }
-    val gens = p.collect { case g: Generate => g }
-    assert(gens.size == 1, p.treeString)
-    assert(!notBelow(p).exists(kernel), p.treeString)
-    assert(gens.head.child.exists(kernel), p.treeString)
+    assert(pairAggs.isEmpty, plan.treeString)
+    val partialBelowExchange = AqePlans.collect(plan) {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case h: HashPartitioning => names(h.expressions) == Seq("q_id")
+        case _ => false
+      }) => AqePlans.collect(e.child) {
+        case l: WindowGroupLimitExec if l.mode == Partial => l
+      }
+    }.flatten
+    assert(partialBelowExchange.nonEmpty, plan.treeString)
   }
 }
