@@ -28,7 +28,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.registerAll(spark) // SQL fns + HOF-dot-product rewrite
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     def loadAvg: Double = os.getSystemLoadAverage
     def procCpuNanos: Long = os match {

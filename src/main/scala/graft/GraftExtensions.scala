@@ -6,12 +6,12 @@ import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{CosineSimilarity, DotProduct, MinHashSignature, NfcNormalize, RollingHash32, SimHash32, SortedIntersectCount}
-import graft.plans.{BandKeysRewrite, BucketCountsRewrite, CosineFoldRewrite, DotProductRewrite, LongDotRewrite, MinHashRewrite, SumSquaresRewrite, ZipWithSubtractRewrite}
 
 /** SparkSessionExtensions entry point: registers graft's native expressions
   * as SQL functions, so `spark.sql("SELECT cosine_similarity(a, b) ...")`
-  * works alongside the Column API, and injects the optimizer rules
-  * (HOF dot-product → codegen'd [[graft.functions.DotProduct]]).
+  * works alongside the Column API. It adds no optimizer rule: graft's
+  * operators call the native expressions directly, so a query plans the
+  * same whether or not its session registered anything.
   *
   * Activate via
   * `SparkSession.builder.withExtensions(new GraftExtensions)` or
@@ -29,22 +29,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.builders.foreach { case (name, b) => register(e, name, b) }
-    GraftExtensions.rewriteRules.foreach(r => e.injectOptimizerRule(_ => r))
   }
 }
 
 object GraftExtensions {
-
-  /** The injected HOF-to-native rewrite lane, in dependency order:
-    * DotProductRewrite must precede CosineFoldRewrite (the cosine fusion
-    * matches on the DotProduct nodes the first rule produces — both run in
-    * the same fixed-point batch, so convergence does not depend on the
-    * order, but in-order lists fuse in a single pass). */
-  private[graft] val rewriteRules: Seq[org.apache.spark.sql.catalyst.rules.Rule[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] = Seq(
-    DotProductRewrite, CosineFoldRewrite, ZipWithSubtractRewrite,
-    LongDotRewrite, MinHashRewrite, SumSquaresRewrite,
-    BucketCountsRewrite, BandKeysRewrite)
 
   /** The numHashes argument must be a constant: it sizes the signature, so a
     * per-row value has no meaning. Fail analysis with a clear message instead
@@ -76,17 +64,11 @@ object GraftExtensions {
     "dot_product" -> (exprs => DotProduct(exprs(0), exprs(1))),
   )
 
-  /** Register on an already-running session (withExtensions only applies to
-    * sessions built fresh): SQL functions plus the optimizer rules, the
-    * latter via `experimental.extraOptimizations` (idempotent). */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
+  /** Register the SQL functions on an already-running session
+    * (withExtensions only applies to sessions built fresh); idempotent. */
+  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit =
     builders.foreach { case (name, b) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         name, b, "built-in")
     }
-    val extra = spark.experimental.extraOptimizations
-    val missing = rewriteRules.filterNot(extra.contains)
-    if (missing.nonEmpty)
-      spark.experimental.extraOptimizations = extra ++ missing
-  }
 }

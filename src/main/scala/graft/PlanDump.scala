@@ -8,7 +8,9 @@ import org.apache.spark.sql.SparkSession
   * so the physical shape (broadcasts, pushed filters, pruned schemas,
   * partial aggregation, exchange reuse) is reviewable without running Spark.
   * Run: `sbt "runMain graft.PlanDump"` (regenerate after plan-affecting
-  * changes). */
+  * changes). Ids that only count up per JVM are normalized (see
+  * [[normalizeIds]]), so a diff of two PLANS.md files shows only plan
+  * changes. */
 object PlanDump {
   val Headline = Seq(
     "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
@@ -72,7 +74,6 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.registerAll(spark) // plans must reflect the injected rewrites
     val dir = "/root/testdata/sf0.001"
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of the headline queries (sf0.001, AQE initial plans)\n\n")
@@ -83,12 +84,33 @@ object PlanDump {
     Headline.foreach { name =>
       val df = SparkEntry.queries(name)(spark, dir)
       sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      sb.append(normalizeIds(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)))
       sb.append("```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${Headline.size} queries)")
     spark.stop()
   }
+
+  /** Tokens that differ between any two runs of the same plan, each with a
+    * fixed stand-in: expression ids (`vec_id#123L`), exchange `plan_id=`s,
+    * RDD ids, lambda-variable suffixes (`lambda x_181`) — all counted up
+    * per JVM — object identity hashes (`@60af38ec`), JVM lambda class
+    * names, the app id inside temp paths, and the source line of an RDD's
+    * call site. */
+  private val Volatile = Seq(
+    "#\\d+" -> "#_",
+    "plan_id=\\d+" -> "plan_id=_",
+    "RDD\\[\\d+\\]" -> "RDD[_]",
+    "(lambda [a-z]+)_\\d+" -> "$1_",
+    "@[0-9a-f]{5,8}\\b" -> "@_",
+    "\\$\\$Lambda\\$\\d+/0x[0-9a-f]+" -> "\\$\\$Lambda\\$_",
+    "local([-_])\\d{10,}" -> "local$1_",
+    "\\.scala:\\d+" -> ".scala:_")
+
+  /** `plan` with every [[Volatile]] token replaced, so a diff of two
+    * PLANS.md files shows only plan changes. */
+  def normalizeIds(plan: String): String =
+    Volatile.foldLeft(plan) { case (p, (re, to)) => p.replaceAll(re, to) }
 }

@@ -50,18 +50,11 @@ private[graft] object HashUtil {
   }
 }
 
-/** @param nullAsAllNull when true, a NULL input ARRAY yields the all-null
-  *   signature `[null × k]` instead of NULL — the exact value the portable
-  *   HOF produces (its outer `transform(0..k-1, …)` iterates the seed range
-  *   even when the shingle array is NULL). [[graft.plans.MinHashRewrite]]
-  *   sets this for nullable inputs so the rewrite needs NO `If(IsNull(sh),…)`
-  *   guard: the guard duplicated `sh`, and for an inline shingles-transform
-  *   chain (the post-CollapseProject shape the rule actually sees) a
-  *   CodegenFallback consumer gets no subexpression elimination, so the
-  *   chain really evaluated twice per row. The SQL-function form keeps the
-  *   default (false): NULL in, NULL out. */
-case class MinHashSignature(child: Expression, numHashes: Int,
-                            nullAsAllNull: Boolean = false)
+/** NULL in, NULL out: a NULL shingle ARRAY yields a NULL signature (the
+  * portable HOF `graft.operators.NearDup.minhashSigHof` yields `[null × k]`
+  * there, because its outer `transform(0..k-1, …)` iterates the seed range
+  * regardless — the one input on which the two differ). */
+case class MinHashSignature(child: Expression, numHashes: Int)
     extends UnaryExpression with CodegenFallback {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -70,16 +63,7 @@ case class MinHashSignature(child: Expression, numHashes: Int,
       s"$prettyName requires array<string>, got ${child.dataType.simpleString}")
   }
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def nullable: Boolean = !nullAsAllNull && child.nullable
   override def prettyName: String = "minhash_signature"
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) {
-      if (nullAsAllNull) new GenericArrayData(new Array[Any](numHashes))
-      else null
-    } else nullSafeEval(v)
-  }
 
   private lazy val seedPrefixes: Array[Array[Byte]] =
     (0 until numHashes).map(s => s"${s}_".getBytes("UTF-8")).toArray
@@ -369,7 +353,7 @@ case class UnorderedPairs(child: Expression)
   * `transform(sequence(0, n-1), k -> size(filter(sh, t -> pmod(hash(t), n) = k)))`
   * which rescans the whole array once PER BUCKET — n·|sh| interpreted lambda
   * steps and n·|sh| Murmur3 evaluations become |sh| hash calls in one JVM
-  * loop ([[graft.plans.BucketCountsRewrite]]).
+  * loop.
   *
   * Parity contract with the HOF, corner for corner:
   *  - the hash is Spark's own `Murmur3HashFunction` at the same seed, so
@@ -380,7 +364,7 @@ case class UnorderedPairs(child: Expression)
   *  - a NULL input ARRAY yields `[null × n]`, never NULL: the HOF's outer
   *    transform iterates the (never-null) sequence literal, and each
   *    `size(filter(NULL, …))` is `size(NULL)` = NULL under the non-legacy
-  *    sizeOfNull the rewrite requires — so the expression itself is
+  *    sizeOfNull — so the expression itself is
   *    non-nullable with element nulls possible only for nullable input. */
 case class BucketCounts(child: Expression, numBuckets: Int, seed: Int)
     extends UnaryExpression with CodegenFallback {
@@ -425,8 +409,7 @@ case class BucketCounts(child: Expression, numBuckets: Int, seed: Int)
 /** One-pass LSH band-key table: `[(b, md5(sig[b·r+1 … b·r+r] ⋈ '|')) × bands]`
   * over a minhash-signature array — `NearDup.bandFrame`'s per-band
   * slice + concat_ws + md5 transform collapsed into one JVM loop that
-  * digests each signature element once, no intermediate slice arrays
-  * ([[graft.plans.BandKeysRewrite]]).
+  * digests each signature element once, no intermediate slice arrays.
   *
   * Parity contract with the HOF
   * `transform(sequence(0, bands-1), b -> struct(b, md5(cast(concat_ws('|',
@@ -500,4 +483,8 @@ object TextHashFunctions {
     ColumnBridge.column(WordGrams(ColumnBridge.expression(text), n))
   def unordered_pairs(items: Column): Column =
     ColumnBridge.column(UnorderedPairs(ColumnBridge.expression(items)))
+  def bucket_counts(tokens: Column, numBuckets: Int, seed: Int): Column =
+    ColumnBridge.column(BucketCounts(ColumnBridge.expression(tokens), numBuckets, seed))
+  def band_keys(sig: Column, numBands: Int, rowsPerBand: Int): Column =
+    ColumnBridge.column(BandKeys(ColumnBridge.expression(sig), numBands, rowsPerBand))
 }

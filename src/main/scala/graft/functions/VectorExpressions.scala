@@ -269,12 +269,12 @@ object SquaredDistances {
 }
 
 /** Plain dot product with the EXACT semantics of the canonical HOF form
-  * `aggregate(zip_with(x, y, (a,b) -> a·b), 0.0, (s,v) -> s+v)` — the
-  * rewrite target of [[graft.plans.DotProductRewrite]], so the contract is
-  * bit-for-bit INCLUDING the null algebra: `zip_with` null-pads the
-  * shorter array (unequal lengths poison the sum to null), a null element
-  * yields a null product which poisons the running `acc + null`, and two
-  * empty arrays fold to the zero literal 0.0. Accumulation is sequential
+  * `aggregate(zip_with(x, y, (a,b) -> a·b), 0.0, (s,v) -> s+v)`
+  * ([[graft.operators.Similarity.dot]]), bit-for-bit INCLUDING the null
+  * algebra: `zip_with` null-pads the shorter array (unequal lengths poison
+  * the sum to null), a null element yields a null product which poisons
+  * the running `acc + null`, and two empty arrays fold to the zero literal
+  * 0.0. Accumulation is sequential
   * ascending-index with floats widened to double before the multiply. */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -448,14 +448,14 @@ object MatVecProduct {
   * `zip_with(a, b, (x, y) -> x − y)` is CodegenFallback and pays an
   * interpreted boxed lambda per element over the whole corpus at encode
   * time; this fuses into whole-stage codegen. Contract (bit-for-bit, spec-
-  * asserted by ZipWithSubtractRewriteSpec):
+  * asserted by VectorKernelParitySpec):
   *  - output length = max(|a|, |b|) — zip_with PADS the shorter side with
   *    nulls, it does not truncate;
   *  - an output element is null iff either side is null-or-missing at that
   *    index (null − y = null);
-  *  - floats widen to double BEFORE subtracting (the rewrite only fires
-  *    when the lambda subtracts double-typed operands, so a raw
-  *    float − float — which rounds to float first — is never matched). */
+  *  - floats widen to double BEFORE subtracting — the twin of a lambda
+  *    over double-cast operands, not of a raw float − float (which rounds
+  *    to float first). */
 case class ZipSubtract(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -526,8 +526,8 @@ object ZipSubtract {
   * lambda per element across the corpus × query crossJoin. Long arithmetic
   * is order-insensitive only in the absence of overflow; accumulation is
   * sequential ascending anyway (the HOF fold order). `failOnError` mirrors
-  * the matched Multiply/Add's ANSI mode: overflow throws the same
-  * ARITHMETIC_OVERFLOW SparkArithmeticException (minus the SQL-fragment
+  * the ANSI mode the HOF's Multiply/Add would capture: overflow throws the
+  * same ARITHMETIC_OVERFLOW SparkArithmeticException (minus the SQL-fragment
   * query context) instead of wrapping. Null algebra: unequal lengths (the
   * zip_with pad) or a null element poison the sum to null — and on that
   * failure path the ANSI THROW contract is still reproduced: zip_with
@@ -714,9 +714,10 @@ case class SumSquares(child: Expression)
   * DIVIDE_BY_ZERO (ANSI). Each of the three accumulators runs its own
   * sequential ascending fold — fusing them into one pass reorders nothing
   * within any accumulator, so results are bit-identical to three separate
-  * loops. `failOnError` mirrors the matched Divide's ANSI mode; the thrown
-  * error carries no SQL-fragment query context (the one documented
-  * divergence — error class and condition are identical). */
+  * loops. `failOnError` mirrors the ANSI mode a `Divide` built at the same
+  * point would capture; the thrown error carries no SQL-fragment query
+  * context (the one documented divergence — error class and condition are
+  * identical). */
 case class CosineFold(left: Expression, right: Expression,
                       failOnError: Boolean) extends BinaryExpression {
 
@@ -818,8 +819,7 @@ object VectorFunctions {
     ColumnBridge.column(CosineSimilarity(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** Codegen'd dot product (exact HOF `aggregate(zip_with(...))` contract);
-    * also the rewrite target of [[graft.plans.DotProductRewrite]]. */
+  /** Codegen'd dot product (exact HOF `aggregate(zip_with(...))` contract). */
   def dot_product(a: Column, b: Column): Column =
     ColumnBridge.column(DotProduct(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
@@ -839,14 +839,14 @@ object VectorFunctions {
     ColumnBridge.column(SquaredDistances(
       ColumnBridge.expression(vec), ColumnBridge.expression(cents)))
 
-  /** Codegen'd elementwise difference with zip_with's pad/null algebra;
-    * also the rewrite target of [[graft.plans.ZipWithSubtractRewrite]]. */
+  /** Codegen'd elementwise difference with zip_with's pad/null algebra. */
   def zip_subtract(a: Column, b: Column): Column =
     ColumnBridge.column(ZipSubtract(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** Codegen'd long dot product (exact HOF fold contract, ANSI-aware);
-    * also the rewrite target of [[graft.plans.LongDotRewrite]]. */
+  /** Codegen'd long dot product (exact HOF fold contract); the overflow
+    * mode is read from `SQLConf` when the column is built, as a `Multiply`
+    * built at the same point would capture it. */
   def long_dot_product(a: Column, b: Column): Column =
     ColumnBridge.column(LongDotProduct(
       ColumnBridge.expression(a), ColumnBridge.expression(b),
@@ -854,9 +854,14 @@ object VectorFunctions {
 
   /** Codegen'd fused cosine with the dot/sqrt/Divide COMPOSITION's exact
     * algebra (Divide-null/throw on zero norms, unlike [[CosineSimilarity]]'s
-    * IEEE NaN); also the rewrite target of [[graft.plans.CosineFoldRewrite]]. */
+    * IEEE NaN); the ANSI mode is read from `SQLConf` when the column is
+    * built, as a `Divide` built at the same point would capture it. */
   def cosine_fold(a: Column, b: Column): Column =
     ColumnBridge.column(CosineFold(
       ColumnBridge.expression(a), ColumnBridge.expression(b),
       org.apache.spark.sql.internal.SQLConf.get.ansiEnabled))
+
+  /** Codegen'd ‖v‖² (exact `aggregate(v, 0.0, (a, x) -> a + x·x)` contract). */
+  def sum_squares(v: Column): Column =
+    ColumnBridge.column(SumSquares(ColumnBridge.expression(v)))
 }

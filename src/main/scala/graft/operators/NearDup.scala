@@ -67,18 +67,21 @@ object NearDup {
       .withColumn("sig", minhashSig(col("sh"), numHashes))
   }
 
+  /** The LSH band-key table of a signature column: `numBands` structs
+    * (band b, key md5(join('|', sig[b·r+1 .. b·r+r]))) with
+    * r = numHashes / numBands — the one band scheme of every MinHash lane,
+    * batch and streaming (see graft.functions.BandKeys). */
+  def bandKeys(sig: Column, numHashes: Int = NumHashes,
+               numBands: Int = NumBands): Column =
+    graft.functions.TextHashFunctions.band_keys(sig, numBands, numHashes / numBands)
+
   /** (doc_id, band, key) LSH band table for a signature frame — shared by
     * the symmetric self-join ([[lshCandidates]]) and the asymmetric
     * batch-vs-history lane ([[nearDupSurvivorsVsHistory]]). */
   private def bandFrame(sigs: DataFrame, numHashes: Int = NumHashes,
-                        numBands: Int = NumBands): DataFrame = {
-    val r = numHashes / numBands
-    val bands = transform(sequence(lit(0), lit(numBands - 1)),
-      b => struct(b.as("band"),
-        md5(concat_ws("|", slice(col("sig"), b * r + 1, lit(r)))).as("key")))
-    sigs.select(col("doc_id"), explode(bands).as("bk"))
+                        numBands: Int = NumBands): DataFrame =
+    sigs.select(col("doc_id"), explode(bandKeys(col("sig"), numHashes, numBands)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-  }
 
   /** LSH banding: band key b = md5(join(sig[b*r+1 .. b*r+r])); docs sharing
     * any band key become candidate pairs. One shuffle on (band, key). */
@@ -449,10 +452,10 @@ object NearDup {
              least(first("na") - max("pa"), first("nb") - max("pb"))).as("ub_acc"),
            first("na").as("na"), first("nb").as("nb"))
       .filter(col("ub") >= alpha && col("ub_acc") >= alpha)
-    // suffix (partition) filter: join the 16-int histograms, not the arrays
+    // suffix (partition) filter: join the 16-int histograms, not the arrays;
+    // bucket = pmod(hash(token), 16) at hash()'s own seed, 42
     val hist = sigs.select(col("doc_id"),
-      transform(sequence(lit(0), lit(SuffixBuckets - 1)),
-        k => size(filter(col("sh"), t => pmod(hash(t), lit(SuffixBuckets)) === k)))
+      graft.functions.TextHashFunctions.bucket_counts(col("sh"), SuffixBuckets, 42)
         .as("hist"))
     val cand = filtered
       .join(hist.select(col("doc_id").as("a_id"), col("hist").as("ha")), "a_id")

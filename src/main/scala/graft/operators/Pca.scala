@@ -121,13 +121,12 @@ object Pca {
     val (_, comps) = fitComponents(df, vecCol, cov)
     val d = comps.length
     val v = col(vecCol)
-    val sqRaw = aggregate(v, lit(0.0),
-      (a, x) => a + x.cast("double") * x.cast("double"))
+    val sqRaw = graft.functions.VectorFunctions.sum_squares(v)
     // codegen'd d x d mat-vec, then a d-element fold over the projections —
-    // same fold trees as the all-HOF form, ~d^2 interpreted lambdas saved
+    // same fold trees as the all-HOF form, no interpreted lambdas
     val proj = graft.functions.VectorFunctions.mat_vec(
       v, typedlit(comps.map(_.toSeq).toSeq))
-    val projSq = aggregate(proj, lit(0.0), (a, p) => a + p * p)
+    val projSq = graft.functions.VectorFunctions.sum_squares(proj)
     df.select(col("vec_id"), col("label"),
         sqRaw.as("sq_raw"), lit(d.toLong).as("n_comps"),
         (abs(projSq - sqRaw) <= lit(relTol) * sqRaw + lit(1e-12))

@@ -114,8 +114,8 @@ object PqIndex {
     e.select(
       col("vec_id"),
       element_at(listIds, pos).as("list"),
-      zip_with(col("embedding").cast("array<double>"), element_at(matrix, pos),
-        (x, c) => x - c).as("embedding"))
+      VectorFunctions.zip_subtract(col("embedding").cast("array<double>"),
+        element_at(matrix, pos)).as("embedding"))
   }
 
   /** Train both shared codebooks eagerly (the bench warms this untimed at
@@ -172,7 +172,7 @@ object PqIndex {
     * Scale shape: the coarse centroid matrix is a broadcast literal (the
     * [[IvfIndex.listExpr]] discipline), so residual computation is a pure
     * narrow map — one fused distance kernel for the assignment position,
-    * one `zip_with` subtraction; PQ training then runs its usual
+    * one `zip_subtract`; PQ training then runs its usual
     * decimal-exact Lloyd over the residual frame (codebook collects are
     * O(M x K x SubDim)); encoding is the same narrow argmin pass. Output
     * carries the coarse `list` alongside the codes — exactly the row an
@@ -305,8 +305,8 @@ object PqIndex {
     }: _*)
     val qluts = IvfIndex.probes(e, coarse, nQueries, nProbe)
       .select(col("q_id"), col("list"),
-        zip_with(col("q_emb").cast("array<double>"), element_at(matrix, lpos),
-          (x, c) => x - c).as("qresid"))
+        VectorFunctions.zip_subtract(col("q_emb").cast("array<double>"),
+          element_at(matrix, lpos)).as("qresid"))
       .select(col("q_id"), col("list"), luts.as("luts"))
     val scored = corpus
       .join(broadcast(qluts), Seq("list"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorFunctions
+
 /** Similarity search over an embedding column (`ArrayType(FloatType)`,
   * FIXTURES.md: `embeddings.vec_id/embedding[64]/label`).
   *
@@ -25,17 +27,20 @@ import org.apache.spark.sql.functions._
   * nProbe) is the correct tool; LSH's win is pruning when closeness exists.
   *
   * All arithmetic is float->double widened *before* multiplying and summed
-  * sequentially (`aggregate`), so results are bit-identical across engines —
-  * no rounding fudge needed for oracle parity.
+  * sequentially (the `aggregate` fold order, run by graft's native
+  * expressions), so results are bit-identical across engines — no rounding
+  * fudge needed for oracle parity.
   */
 object Similarity {
 
-  /** Sequential-order dot product of two float vectors, widened to double. */
+  /** Sequential-order dot product of two float vectors, widened to double —
+    * the interpreted reference form of [[graft.functions.DotProduct]]. */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, x) => acc + x)
 
-  /** Reference formulation via higher-order functions (interpreted lambdas). */
+  /** Reference formulation via higher-order functions (interpreted lambdas);
+    * [[graft.functions.CosineFold]] reproduces it exactly. */
   def cosineHof(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
@@ -77,8 +82,7 @@ object Similarity {
   private def bucketKey(v: Column, t: Int, nBits: Int, dim: Int): Column =
     (0 until nBits).map { j =>
       val plane = array((0 until dim).map(i => lit(planeSign(t, j, i).toDouble)): _*)
-      val s = aggregate(zip_with(v, plane, (x, r) => x.cast("double") * r),
-        lit(0.0), (a, x) => a + x)
+      val s = VectorFunctions.dot_product(v, plane)
       when(s > 0, lit(1L << j)).otherwise(0L)
     }.reduce(_ + _)
 
@@ -482,8 +486,7 @@ object Similarity {
       .crossJoin(broadcast(q))
       .filter(col("q_id") =!= col("n_id"))
       .withColumn("iscore",
-        aggregate(zip_with(col("q_codes"), col("n_codes"), (x, y) => x * y),
-          lit(0L), (a, x) => a + x))
+        VectorFunctions.long_dot_product(col("q_codes"), col("n_codes")))
       .select(col("q_id"), col("n_id"), col("iscore")).as[ScoredL]
       .groupByKey(_.q_id)
       .agg(new MaxKByScore(rerank).toColumn.name("hits"))
@@ -653,7 +656,7 @@ object Similarity {
   def centroidScores(emb: DataFrame, cents: Map[Int, Seq[Double]]): DataFrame = {
     val cmap = typedlit(cents)
     emb.select(col("vec_id"), col("label"),
-      cosineHof(col("embedding"), element_at(cmap, col("label")))
+      VectorFunctions.cosine_fold(col("embedding"), element_at(cmap, col("label")))
         .as("cos_centroid"))
   }
 

@@ -3,22 +3,24 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorFunctions
+
 /** Embedding-column preprocessing for similarity/ANN pipelines: L2
   * normalization and int8 quantization — the standard storage/compute
   * reductions applied before indexing at scale (quantized vectors are 4x
   * smaller on the wire and in memory; normalized vectors turn cosine into a
   * plain dot product).
   *
-  * Every op is a narrow map over the scan — zero shuffle. Arithmetic is
-  * float->double widened and sequentially ordered (`aggregate`), matching
-  * the determinism discipline of [[Similarity]] so the DuckDB oracle
-  * reproduces results bit-identically.
+  * Every op is a narrow map over the scan — zero shuffle. Vector columns are
+  * `array<float|double>`. Arithmetic is float->double widened and
+  * sequentially ordered (the `aggregate` fold order, run by graft's native
+  * expressions), matching the determinism discipline of [[Similarity]] so
+  * the DuckDB oracle reproduces results bit-identically.
   */
 object VectorOps {
 
   /** Sequential-order L2 norm, float widened to double. */
-  def l2Norm(v: Column): Column =
-    sqrt(aggregate(v, lit(0.0), (a, x) => a + x.cast("double") * x.cast("double")))
+  def l2Norm(v: Column): Column = sqrt(VectorFunctions.sum_squares(v))
 
   def maxAbs(v: Column): Column =
     array_max(transform(v, x => abs(x.cast("double"))))
@@ -98,8 +100,7 @@ object VectorOps {
   def randomProject(v: Column, outDims: Int = 8, dim: Int = 64): Column =
     array((0 until outDims).map { j =>
       val signs = array((0 until dim).map(i => lit(projSign(j, i).toDouble)): _*)
-      aggregate(zip_with(v, signs, (x, r) => x.cast("double") * r),
-        lit(0.0), (a, x) => a + x)
+      VectorFunctions.dot_product(v, signs)
     }: _*)
 
   /** Query-facing projection digest: one scalar column per projected
@@ -115,7 +116,7 @@ object VectorOps {
     graft.core.Parallelism.forCompute(df)
       .select(col(id), randomProject(col(emb), outDims, dim).as("proj"))
       .select(col(id) +: comps :+
-        aggregate(col("proj"), lit(0.0), (a, x) => a + x * x).as("norm2"): _*)
+        VectorFunctions.sum_squares(col("proj")).as("norm2"): _*)
   }
 
   /** Chunk->document embedding pooling: the element-wise MEAN of each
@@ -261,8 +262,7 @@ object VectorOps {
 
   def normAudit(df: DataFrame, vecCol: String, groupCol: String): DataFrame = {
     val v = col(vecCol)
-    val sq = aggregate(v, lit(0.0),
-      (a, x) => a + x.cast("double") * x.cast("double"))
+    val sq = VectorFunctions.sum_squares(v)
     val nonFinite = exists(v,
       x => isnan(x.cast("double")) || abs(x.cast("double")) === lit(Double.PositiveInfinity))
     // norm stats are over FINITE rows only — a NaN feature would poison

@@ -258,16 +258,10 @@ object StreamingOps {
                            threshold: Double = 0.5, words: Int = 3,
                            watermarkDelay: String = "1 hour"): DataFrame = {
     import graft.operators.NearDup
-    val r = NearDup.NumHashes / NearDup.NumBands
     val sh = NearDup.shingles(col("text"), words)
     val sig = NearDup.minhashSig(col("sh"))
-    val bands = transform(sequence(lit(0), lit(NearDup.NumBands - 1)),
-      b => struct(b.as("band"),
-        md5(concat_ws("|", slice(col("sig"), b * r + 1, lit(r)))).as("key")))
-    val hBands = historySigs.select(col("doc_id").as("h_id"),
-        explode(transform(sequence(lit(0), lit(NearDup.NumBands - 1)),
-          b => struct(b.as("band"),
-            md5(concat_ws("|", slice(col("sig"), b * r + 1, lit(r)))).as("key")))).as("bk"))
+    val bands = NearDup.bandKeys(col("sig"))
+    val hBands = historySigs.select(col("doc_id").as("h_id"), explode(bands).as("bk"))
       .select(col("h_id"), col("bk.band").as("band"), col("bk.key").as("key"))
     val hSets = historySigs.select(col("doc_id").as("h_id"), col("sh").as("h_sh"))
     docs
@@ -328,22 +322,14 @@ object StreamingOps {
     val exact = pri(g.join(historyFps, Seq("fp"), "left_semi"), 2)
     val nonExact = g.join(historyFps, Seq("fp"), "left_anti")
 
-    val r = NearDup.NumHashes / NearDup.NumBands
-    val bands = transform(sequence(lit(0), lit(NearDup.NumBands - 1)),
-      b => struct(b.as("band"),
-        md5(concat_ws("|", slice(col("sig"), b * r + 1, lit(r)))).as("key")))
+    val bands = NearDup.bandKeys(col("sig"))
     val sBand = nonExact
       .withColumn("sh", NearDup.shingles(col("text"), words))
       .withColumn("sig", NearDup.minhashSig(col("sh")))
       .select(col("doc_id"), col("ts"), col("sh"), explode(bands).as("bk"))
       .select(col("doc_id"), col("ts"), col("sh"),
         col("bk.band").as("band"), col("bk.key").as("key"))
-    val hBandSets = historySigs.select(
-        explode(transform(sequence(lit(0), lit(NearDup.NumBands - 1)),
-          b => struct(b.as("band"),
-            md5(concat_ws("|", slice(col("sig"), b * r + 1, lit(r)))).as("key"))))
-          .as("bk"),
-        col("sh").as("h_sh"))
+    val hBandSets = historySigs.select(explode(bands).as("bk"), col("sh").as("h_sh"))
       .select(col("bk.band").as("h_band"), col("bk.key").as("h_key"), col("h_sh"))
     val inter = graft.functions.VectorFunctions
       .sorted_intersect_count(col("sh"), col("h_sh"))
