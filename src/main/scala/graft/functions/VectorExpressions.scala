@@ -448,7 +448,7 @@ object MatVecProduct {
   * `zip_with(a, b, (x, y) -> x − y)` is CodegenFallback and pays an
   * interpreted boxed lambda per element over the whole corpus at encode
   * time; this fuses into whole-stage codegen. Contract (bit-for-bit, spec-
-  * asserted by VectorKernelParitySpec):
+  * asserted by ZipWithSubtractRewriteSpec):
   *  - output length = max(|a|, |b|) — zip_with PADS the shorter side with
   *    nulls, it does not truncate;
   *  - an output element is null iff either side is null-or-missing at that

@@ -5,31 +5,14 @@ import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, Streaming
 import org.apache.spark.sql.functions.{col, md5}
 
 /** One path per kernel: graft's operators build its native expressions
-  * directly, so a lane plans the same on a session that registered nothing
+  * directly, so a query plans the same on a session that registered nothing
   * — here a fresh `newSession()`, which shares no session state with the
-  * suites that ran before it. */
+  * suites that ran before it. The batch lanes are checked the same way,
+  * each beside its kernel's parity cases in `graft.plans`. */
 class NativePlanSpec extends SparkSpec {
 
-  /** Lane -> the native node its optimized plan must carry. */
-  private val laneKernels = Seq(
-    "q_vec_project" -> "dot_product",
-    "q_sim_topk_lsh" -> "dot_product",
-    "q_centroid_filter" -> "cosine_fold",
-    "q_sim_topk_sq" -> "long_dot_product",
-    "q_vec_rpq" -> "zip_subtract",
-    "q_sim_topk_ivfrpq" -> "zip_subtract",
-    "q_vec_norm_audit" -> "sum_squares",
-    "q_vec_quantize" -> "sum_squares",
-    "q_pca_project" -> "sum_squares",
-    "q_dedup_minhash" -> "band_keys",
-    "q_dedup_jaccard" -> "bucket_counts")
-
-  test("fresh session: every kernel lane and the streaming band keys plan natively") {
+  test("fresh session: the streaming band-key queries plan band_keys on both join sides") {
     val fresh = spark.newSession()
-    for ((lane, kernel) <- laneKernels) {
-      val plan = SparkEntry.queries(lane)(fresh, sf).queryExecution.optimizedPlan.toString
-      assert(plan.contains(kernel), s"$lane plan shows no $kernel:\n${plan.take(3000)}")
-    }
     implicit val sqlCtx = fresh.sqlContext
     import fresh.implicits._
     val historySigs = operators.NearDup.signatures(

@@ -1,65 +1,48 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 
-import graft.{GraftExtensions, SparkSpec}
+import graft.operators.NearDup
+import graft.functions.TextHashFunctions.{band_keys, minhash_signature}
 
-/** The band-key rewrite must be INVISIBLE except for speed: per-band
-  * md5(concat_ws('|', slice(...))) keys byte-identical (including concat_ws's
-  * null-element skip, slice truncation, and the null-array → md5("") table),
-  * and guards refusing wrong separators, strides, or field names. */
-class BandKeysRewriteSpec extends SparkSpec {
+/** `band_keys` against the per-band md5(concat_ws('|', slice(...)))
+  * transform: byte-identical keys, including concat_ws's null-element skip,
+  * slice truncation, and the null-array → md5("") table. */
+class BandKeysRewriteSpec extends KernelParity {
 
-  private def ensure(): Unit = GraftExtensions.registerAll(spark)
+  private def docShingles = graft.sources.Tables.documents(spark, sf)
+    .select(col("doc_id"), NearDup.shingles(col("text")).as("sh"))
 
-  private def optimizedPlan(df: DataFrame): String =
-    df.queryExecution.optimizedPlan.toString
-
-  /** The bandFrame shape: 4 bands x 4 rows over a 16-hash signature. */
   private def bandsHof(sig: Column, bands: Int, r: Int): Column =
     transform(sequence(lit(0), lit(bands - 1)),
       b => struct(b.as("band"),
         md5(concat_ws("|", slice(sig, b * r + 1, lit(r)))).as("key")))
 
-  /** Byte-identical twin the matcher refuses: field names band0/key0 —
-    * names never affect values and no optimizer pass renames struct
-    * fields, but the rule requires the native schema's band/key. */
-  private def bandsHofPinned(sig: Column, bands: Int, r: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => struct(b.as("band0"),
-        md5(concat_ws("|", slice(sig, b * r + 1, lit(r)))).as("key0")))
-
-  private def sigs = graft.sources.Tables.documents(spark, sf)
-    .select(col("doc_id"), graft.functions.TextHashFunctions.minhash_signature(
-      graft.operators.NearDup.shingles(col("text")), 16).as("sig"))
-
-  test("the bandFrame shape over signatures is rewritten to band_keys") {
-    ensure()
-    val df = sigs.select(bandsHof(col("sig"), 4, 4).as("bands"))
-    val plan = optimizedPlan(df)
-    assert(plan.contains("band_keys"), s"rewrite did not fire:\n$plan")
-    assert(!plan.contains("lambdafunction"), s"HOF survived the rewrite:\n$plan")
+  /** A band table as comparable (band, key) pairs; null stays null. */
+  private def bandPairs(v: Any): Any = v match {
+    case null                          => null
+    case rows: scala.collection.Seq[_] =>
+      rows.map { case r: Row => (r.getInt(0), r.getString(1)) }
   }
 
+  private val md5Empty = java.security.MessageDigest.getInstance("MD5")
+    .digest(Array.empty[Byte]).map("%02x".format(_)).mkString
+
   test("band/key values byte-identical to the slice+concat_ws+md5 transform") {
-    ensure()
-    val rows = sigs.limit(64)
-      .select(bandsHof(col("sig"), 4, 4).as("nat"),
-        bandsHofPinned(col("sig"), 4, 4).as("hof"))
-      .selectExpr(
-        "transform(nat, s -> concat(s.band, ':', s.key)) as nat",
-        "transform(hof, s -> concat(s.band0, ':', s.key0)) as hof")
+    val rows = docShingles.limit(64)
+      .select(minhash_signature(col("sh"), 16).as("sig"))
+      .select(band_keys(col("sig"), 4, 4).as("nat"),
+        bandsHof(col("sig"), 4, 4).as("hof"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
-      assert(r.getSeq[String](0) == r.getSeq[String](1),
-        s"band tables differ: ${r.getSeq[String](0)} vs ${r.getSeq[String](1)}")
+      assert(bandPairs(r.get(0)) == bandPairs(r.get(1)),
+        s"band tables differ: ${r.get(0)} vs ${r.get(1)}")
     }
   }
 
   test("corners: null array, null elements (concat_ws skip), short array (slice truncation)") {
-    ensure()
     import spark.implicits._
     val df = Seq(
       ("null_array", None),
@@ -67,67 +50,24 @@ class BandKeysRewriteSpec extends SparkSpec {
         Option("e"), Option("f"), None, None))),
       ("short", Some(Seq(Option("a"), Option("b"), Option("c")))),
       ("plain", Some((1 to 8).map(i => Option(s"h$i")))))
-      .toDF("tag", "sig").repartition(2)
-    val out = df.select(col("tag"),
-        bandsHof(col("sig"), 2, 4).as("nat"),
-        bandsHofPinned(col("sig"), 2, 4).as("hof"))
-      .selectExpr("tag",
-        "transform(nat, s -> concat(s.band, ':', s.key)) as nat",
-        "transform(hof, s -> concat(s.band0, ':', s.key0)) as hof")
-      .collect()
-      .map(r => r.getString(0) -> (r.getSeq[String](1), r.getSeq[String](2)))
-      .toMap
+      .toDF("tag", "sig")
+    val out = both(df, band_keys(col("sig"), 2, 4), bandsHof(col("sig"), 2, 4),
+      bandPairs)
     out.foreach { case (tag, (nat, hof)) =>
       assert(nat == hof, s"$tag: native=$nat hof=$hof")
     }
     // null array: every band keys md5("") — concat_ws never returns null
-    val md5Empty = java.security.MessageDigest.getInstance("MD5")
-      .digest(Array.empty[Byte]).map("%02x".format(_)).mkString
-    assert(out("null_array")._1 == Seq(s"0:$md5Empty", s"1:$md5Empty"))
-    // short array: band 1 sees only nothing past index 3 -> md5("")
-    assert(out("short")._1(1) == s"1:$md5Empty")
-  }
-
-  test("guards: wrong separator, wrong stride, and renamed fields are refused") {
-    ensure()
-    def planOf(c: Column): String =
-      optimizedPlan(sigs.select(c.as("bands")))
-    val wrongSep = transform(sequence(lit(0), lit(3)),
-      b => struct(b.as("band"),
-        md5(concat_ws("#", slice(col("sig"), b * 4 + 1, lit(4)))).as("key")))
-    assert(!planOf(wrongSep).contains("band_keys"), "separator '#' must not match")
-    val wrongStride = transform(sequence(lit(0), lit(3)),
-      b => struct(b.as("band"),
-        md5(concat_ws("|", slice(col("sig"), b * 4 + 2, lit(4)))).as("key")))
-    assert(!planOf(wrongStride).contains("band_keys"), "start b*4+2 must not match")
-    assert(!planOf(bandsHofPinned(col("sig"), 4, 4)).contains("band_keys"),
-      "renamed struct fields must not match")
-  }
-
-  test("degenerate stride 0 is refused, not crashed: slice(sig, b*0+1, 0) still evaluates") {
-    ensure()
-    // contrived but valid HOF: every band slices nothing -> concat_ws("")
-    // -> md5(""). Matching it would construct BandKeys(_, bands, 0) whose
-    // require(rowsPerBand > 0) throws AT OPTIMIZATION TIME — the guard must
-    // leave the shape alone instead.
-    val zero = transform(sequence(lit(0), lit(1)),
-      b => struct(b.as("band"),
-        md5(concat_ws("|", slice(col("sig"), b * 0 + 1, lit(0)))).as("key")))
-    val rows = sigs.limit(4).select(zero.as("bands"))
-      .selectExpr("transform(bands, s -> concat(s.band, ':', s.key)) as b")
-      .collect()
-    val md5Empty = java.security.MessageDigest.getInstance("MD5")
-      .digest(Array.empty[Byte]).map("%02x".format(_)).mkString
-    rows.foreach { r =>
-      assert(r.getSeq[String](0) == Seq(s"0:$md5Empty", s"1:$md5Empty"))
-    }
+    assert(out("null_array")._1 == Seq((0, md5Empty), (1, md5Empty)))
+    // short array: band 1 sees nothing past index 3 -> md5("")
+    assert(out("short")._1.asInstanceOf[scala.collection.Seq[(Int, String)]](1) == ((1, md5Empty)))
   }
 
   test("the real minhashPairs lane carries band_keys in its plan") {
-    ensure()
-    val docs = graft.sources.Tables.documents(spark, sf).limit(200)
-    val out = graft.operators.NearDup.minhashPairs(docs)
-    assert(optimizedPlan(out).contains("band_keys"),
-      "bandFrame should be rewritten in the live lane")
+    val fresh = spark.newSession()
+    val docs = graft.sources.Tables.documents(fresh, sf).limit(200)
+    val out = NearDup.minhashPairs(docs)
+    assert(out.queryExecution.optimizedPlan.toString.contains("band_keys"),
+      "bandFrame should call band_keys in the live lane")
+    assertLaneNative("q_dedup_minhash", "band_keys")
   }
 }

@@ -1,52 +1,29 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.{GraftExtensions, SparkSpec}
+import graft.operators.NearDup
+import graft.functions.TextHashFunctions.bucket_counts
 
-/** The bucket-histogram rewrite must be INVISIBLE except for speed: the
-  * per-bucket `size(filter(...))` rescan's exact values (Murmur3 at seed 42,
-  * pmod bucketing, null elements counting into the seed's bucket), the
-  * null-array → [null × n] corner, and guards refusing shapes whose modulus
-  * differs from the bucket range or whose hash isn't the bare element. */
-class BucketCountsRewriteSpec extends SparkSpec {
+/** `bucket_counts` against the per-bucket `size(filter(…))` rescan the
+  * PPJoin+ suffix filter used to run: exact values (Murmur3 at seed 42,
+  * pmod bucketing, null elements counting into the seed's bucket) and the
+  * null-array → [null × n] corner. */
+class BucketCountsRewriteSpec extends KernelParity {
 
-  private def ensure(): Unit = GraftExtensions.registerAll(spark)
+  private def docShingles = graft.sources.Tables.documents(spark, sf)
+    .select(col("doc_id"), NearDup.shingles(col("text")).as("sh"))
 
-  private def optimizedPlan(df: DataFrame): String =
-    df.queryExecution.optimizedPlan.toString
-
-  /** The prefixCandidates suffix-filter shape. */
-  private def histHof(sh: Column, n: Int): Column =
+  /** Bucket of t is pmod(hash(t), n); hash() seeds Murmur3 with 42. */
+  private def bucketsHof(sh: Column, n: Int): Column =
     transform(sequence(lit(0), lit(n - 1)),
       k => size(filter(sh, t => pmod(hash(t), lit(n)) === k)))
 
-  /** Bit-exact twin the matcher refuses: pmod over the LONG-widened hash —
-    * same bucket for every int (sign-preserving widening), but the matcher
-    * requires the bare int Murmur3Hash child. No optimizer pass strips a
-    * non-literal-adjacent cast inside a lambda. */
-  private def histHofPinned(sh: Column, n: Int): Column =
-    transform(sequence(lit(0), lit(n - 1)),
-      k => size(filter(sh,
-        t => pmod(hash(t).cast("long"), lit(n.toLong)) === k.cast("long"))))
-
-  private def docShingles = graft.sources.Tables.documents(spark, sf)
-    .select(col("doc_id"), graft.operators.NearDup.shingles(col("text")).as("sh"))
-
-  test("the suffix-filter histogram over documents is rewritten to bucket_counts") {
-    ensure()
-    val df = docShingles.select(histHof(col("sh"), 16).as("hist"))
-    val plan = optimizedPlan(df)
-    assert(plan.contains("bucket_counts"), s"rewrite did not fire:\n$plan")
-    assert(!plan.contains("lambdafunction"), s"HOF survived the rewrite:\n$plan")
-  }
-
   test("values identical to the per-bucket rescan on real shingle arrays") {
-    ensure()
     val rows = docShingles.limit(64)
-      .select(histHof(col("sh"), 16).as("nat"),
-        histHofPinned(col("sh"), 16).as("hof"))
+      .select(bucket_counts(col("sh"), 16, 42).as("nat"),
+        bucketsHof(col("sh"), 16).as("hof"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -56,47 +33,31 @@ class BucketCountsRewriteSpec extends SparkSpec {
   }
 
   test("corners: null array -> [null x n]; null element counts at pmod(seed, n); empty -> zeros") {
-    ensure()
     import spark.implicits._
     val df = Seq(
       ("null_array", None),
       ("null_elem", Some(Seq(Option("alpha"), None))),
       ("empty", Some(Seq.empty[Option[String]])),
       ("plain", Some(Seq(Option("alpha"), Option("beta"), Option("alpha")))))
-      .toDF("tag", "sh").repartition(2)
-    val out = df.select(col("tag"),
-        histHof(col("sh"), 4).as("nat"), histHofPinned(col("sh"), 4).as("hof"))
-      .collect()
-      .map(r => r.getString(0) -> (r.getSeq[Integer](1), r.getSeq[Integer](2)))
-      .toMap
+      .toDF("tag", "sh")
+    val out = both(df, bucket_counts(col("sh"), 4, 42), bucketsHof(col("sh"), 4))
     out.foreach { case (tag, (nat, hof)) =>
       assert(nat == hof, s"$tag: native=$nat hof=$hof")
     }
+    def total(tag: String) = out(tag)._1.asInstanceOf[scala.collection.Seq[Integer]].map(_.toInt).sum
     assert(out("null_array")._1 == Seq(null, null, null, null))
-    assert(out("empty")._1.map(_.toInt).sum == 0)
-    assert(out("null_elem")._1.map(_.toInt).sum == 2)
-    assert(out("plain")._1.map(_.toInt).sum == 3)
-  }
-
-  test("guards: modulus != bucket range and multi-child hash are refused") {
-    ensure()
-    val wrongMod = docShingles.select(
-      transform(sequence(lit(0), lit(15)),
-        k => size(filter(col("sh"), t => pmod(hash(t), lit(8)) === k))).as("h"))
-    assert(!optimizedPlan(wrongMod).contains("bucket_counts"),
-      "modulus 8 over a 16-bucket range must not match")
-    val multiChild = docShingles.select(
-      transform(sequence(lit(0), lit(15)),
-        k => size(filter(col("sh"), t => pmod(hash(t, t), lit(16)) === k))).as("h"))
-    assert(!optimizedPlan(multiChild).contains("bucket_counts"),
-      "a multi-child hash changes the bytes and must not match")
+    assert(total("empty") == 0)
+    // a NULL element hashes to the seed and counts, as in the HOF
+    assert(total("null_elem") == 2)
+    assert(total("plain") == 3)
   }
 
   test("the real jaccardJoin lane carries bucket_counts in its plan") {
-    ensure()
-    val docs = graft.sources.Tables.documents(spark, sf).limit(200)
-    val out = graft.operators.NearDup.jaccardJoin(docs, threshold = 0.5)
-    assert(optimizedPlan(out).contains("bucket_counts"),
-      "prefixCandidates' suffix filter should be rewritten in the live lane")
+    val fresh = spark.newSession()
+    val docs = graft.sources.Tables.documents(fresh, sf).limit(200)
+    val out = NearDup.jaccardJoin(docs, threshold = 0.5)
+    assert(out.queryExecution.optimizedPlan.toString.contains("bucket_counts"),
+      "prefixCandidates' suffix filter should call bucket_counts in the live lane")
+    assertLaneNative("q_dedup_jaccard", "bucket_counts")
   }
 }

@@ -1,140 +1,69 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{GraftExtensions, SparkSpec}
 import graft.operators.Similarity
+import graft.functions.VectorFunctions.cosine_fold
 
-/** The cosine-fusion rewrite must preserve the COMPOSITION's algebra
-  * exactly: three sequential folds fused into one pass (bit-identical per
-  * accumulator), Spark Divide's zero-norm contract (NULL under LEGACY,
-  * DIVIDE_BY_ZERO under ANSI — NOT CosineSimilarity's IEEE NaN), and
-  * guards that refuse mismatched norm operands. */
-class CosineFoldRewriteSpec extends SparkSpec {
-
-  private def ensure(): Unit = GraftExtensions.registerAll(spark)
-
-  private def optimizedPlan(df: DataFrame): String =
-    df.queryExecution.optimizedPlan.toString
-
-  private def embeddings = graft.sources.Tables.embeddings(spark, sf)
-
-  /** Bit-exact value twin of the composition that the matcher refuses (the
-    * dividend is dot·1.0, not a bare DotProduct), so it genuinely stays the
-    * three-fold Divide composition — the parity reference. */
-  private def cosineRef(a: org.apache.spark.sql.Column,
-                        b: org.apache.spark.sql.Column) =
-    (Similarity.dot(a, b) * lit(1.0)) /
-      (sqrt(Similarity.dot(a, a)) * sqrt(Similarity.dot(b, b)))
-
-  test("HOF cosine over a parquet scan fuses into one cosine_fold pass") {
-    ensure()
-    val a = embeddings.select(col("vec_id"), col("embedding").as("a"))
-    val b = embeddings.select(col("vec_id"), col("embedding").as("b"))
-    val df = a.join(b, "vec_id")
-      .select(Similarity.cosineHof(col("a"), col("b")).as("c"))
-    val plan = optimizedPlan(df)
-    assert(plan.contains("cosine_fold"), s"fusion did not fire:\n$plan")
-    assert(!plan.contains("dot_product"),
-      s"unfused dot_product survived:\n$plan")
-  }
+/** `cosine_fold` against the three-fold composition `Similarity.cosineHof`:
+  * bit-identical per accumulator, the composition's null algebra, and Spark
+  * Divide's zero-norm contract (NULL under LEGACY, DIVIDE_BY_ZERO under
+  * ANSI — not CosineSimilarity's IEEE NaN). */
+class CosineFoldRewriteSpec extends KernelParity {
 
   test("fused result is bit-identical to the three-fold composition") {
-    ensure()
-    val df = embeddings.limit(32).select(
-      Similarity.cosineHof(col("embedding"), col("embedding")).as("nat"),
-      cosineRef(col("embedding"), col("embedding")).as("ref"))
-    df.collect().foreach { r =>
-      assert(java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ==
-        java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
-        s"bits differ: ${r.getDouble(0)} vs ${r.getDouble(1)}")
-    }
+    val a = embeddings.select(col("vec_id"), col("embedding").as("a"))
+    val b = embeddings.select((col("vec_id") + 1).as("vec_id"), col("embedding").as("b"))
+    val rows = a.join(b, "vec_id").limit(32)
+      .select(cosine_fold(col("a"), col("b")).as("nat"),
+        Similarity.cosineHof(col("a"), col("b")).as("hof"))
+      .collect()
+    assert(rows.nonEmpty)
+    rows.foreach(r => assert(same(r.getDouble(0), r.getDouble(1)),
+      s"bits differ: ${r.getDouble(0)} vs ${r.getDouble(1)}"))
   }
 
   test("null algebra: unequal lengths, null element, null array match the composition") {
-    ensure()
-    import spark.implicits._
-    val df = Seq(
-      ("len_mismatch", Some(Seq(Some(1.0f), Some(2.0f))), Some(Seq(Some(1.0f)))),
-      ("null_elem", Some(Seq(Some(1.0f), None)), Some(Seq(Some(1.0f), Some(2.0f)))),
-      ("null_array", None, Some(Seq(Some(1.0f)))),
-      ("plain", Some(Seq(Some(3.0f), Some(4.0f))), Some(Seq(Some(3.0f), Some(4.0f)))))
-      .toDF("tag", "a", "b").repartition(2)
-    val out = df.select(col("tag"),
-        Similarity.cosineHof(col("a"), col("b")).as("nat"),
-        cosineRef(col("a"), col("b")).as("ref"))
-      .collect().map(r => r.getString(0) ->
-        (if (r.isNullAt(1)) null else r.getDouble(1),
-         if (r.isNullAt(2)) null else r.getDouble(2))).toMap
-    out.foreach { case (tag, (nat, ref)) =>
-      assert(nat == ref, s"$tag: fused=$nat composition=$ref")
-    }
-    assert(out("plain")._1 == 1.0)
-    assert(out("len_mismatch")._1 == null)
+    val out = parity(floatPairs,
+      cosine_fold(col("a"), col("b")), Similarity.cosineHof(col("a"), col("b")))
+    assert(out("len_mismatch") == null)
+    assert(out("null_elem") == null)
+    assert(out("null_array") == null)
+    assert(out("nan").asInstanceOf[Double].isNaN)
   }
 
   test("ANSI zero-norm: fused form throws the same DIVIDE_BY_ZERO as the composition") {
-    ensure()
-    assume(spark.conf.get("spark.sql.ansi.enabled") == "true")
     import spark.implicits._
-    val zero = Seq((Seq(0.0f, 0.0f), Seq(1.0f, 2.0f))).toDF("a", "b")
-      .repartition(1)
-    def condition(t: Throwable): String = {
-      var c = t
-      while (c != null) {
-        c match {
-          case s: org.apache.spark.SparkThrowable if s.getCondition != null =>
-            return s.getCondition
-          case _ =>
+    withAnsi(on = true) {
+      val zeroNorm = Seq((Seq(0.0f, 0.0f), Seq(1.0f, 2.0f))).toDF("a", "b")
+      val empty = Seq((Seq.empty[Float], Seq.empty[Float])).toDF("a", "b")
+      for (df <- Seq(zeroNorm, empty).map(_.repartition(1))) {
+        val natErr = intercept[Throwable] {
+          df.select(cosine_fold(col("a"), col("b"))).collect()
         }
-        c = c.getCause
+        val hofErr = intercept[Throwable] {
+          df.select(Similarity.cosineHof(col("a"), col("b"))).collect()
+        }
+        assert(condition(natErr) == "DIVIDE_BY_ZERO", s"native: $natErr")
+        assert(condition(hofErr) == "DIVIDE_BY_ZERO", s"composition: $hofErr")
       }
-      "none"
     }
-    val natErr = intercept[Throwable] {
-      zero.select(Similarity.cosineHof(col("a"), col("b"))).collect()
-    }
-    val refErr = intercept[Throwable] {
-      zero.select(cosineRef(col("a"), col("b"))).collect()
-    }
-    assert(condition(natErr) == "DIVIDE_BY_ZERO", s"fused: $natErr")
-    assert(condition(refErr) == "DIVIDE_BY_ZERO", s"composition: $refErr")
   }
 
   test("LEGACY zero-norm: fused form yields NULL like the composition (not NaN)") {
-    ensure()
     import spark.implicits._
-    val prev = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try {
-      val zero = Seq((Seq(0.0f, 0.0f), Seq(1.0f, 2.0f))).toDF("a", "b")
-        .repartition(1)
-      val r = zero.select(Similarity.cosineHof(col("a"), col("b")).as("nat"),
-        cosineRef(col("a"), col("b")).as("ref")).head()
-      assert(r.isNullAt(0), "fused zero-norm must be NULL under LEGACY, not NaN")
-      assert(r.isNullAt(1))
-    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
-  }
-
-  test("guard: mismatched norm operands are NOT fused") {
-    ensure()
-    val df = embeddings.alias("e1")
-      .join(embeddings.alias("e2"), col("e1.vec_id") === col("e2.vec_id"))
-      .select((Similarity.dot(col("e1.embedding"), col("e2.embedding")) /
-        (sqrt(Similarity.dot(col("e1.embedding"), col("e1.embedding"))) *
-         sqrt(Similarity.dot(col("e2.embedding"), col("e1.embedding"))))).as("c"))
-    // the second "norm" is dot(b, a), not dot(b, b) — not a cosine
-    assert(!optimizedPlan(df).contains("cosine_fold"),
-      "fusion fired on a non-norm denominator")
+    withAnsi(on = false) {
+      val df = Seq(
+        ("zero_norm", Seq(0.0f, 0.0f), Seq(1.0f, 2.0f)),
+        ("empty", Seq.empty[Float], Seq.empty[Float])).toDF("tag", "a", "b")
+      val out = parity(df,
+        cosine_fold(col("a"), col("b")), Similarity.cosineHof(col("a"), col("b")))
+      assert(out("zero_norm") == null, "zero norm must be NULL under LEGACY, not NaN")
+      assert(out("empty") == null)
+    }
   }
 
   test("the centroid-filter lane gets the fused cosine end-to-end") {
-    ensure()
-    val df = graft.SparkEntry.queries("q_centroid_filter")(spark, sf)
-    val plan = df.queryExecution.optimizedPlan.toString
-    assert(plan.contains("cosine_fold"),
-      s"q_centroid_filter plan shows no cosine_fold:\n${plan.take(2000)}")
-    assert(df.count() > 0)
+    assertLaneNative("q_centroid_filter", "cosine_fold")
   }
 }

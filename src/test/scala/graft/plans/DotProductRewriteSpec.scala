@@ -1,87 +1,51 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.{GraftExtensions, SparkSpec}
+import graft.GraftExtensions
 import graft.operators.Similarity
+import graft.functions.VectorFunctions
+import graft.functions.VectorFunctions.dot_product
 
-/** The HOF→native dot-product rewrite must be INVISIBLE except for speed:
-  * bit-identical values (including the full null algebra) and a plan that
-  * swaps the interpreted ArrayAggregate/ZipWith pair for the codegen'd
-  * `dot_product` expression. The match is narrow by design — shapes whose
-  * semantics differ from the native loop (−0.0 zero literal, float-rounded
-  * multiply) must be left alone, and these guards are asserted here.
-  */
-class DotProductRewriteSpec extends SparkSpec {
+/** `dot_product` against the interpreted `aggregate(zip_with(…))` fold
+  * (`Similarity.dot`): bit-identical values, the full null algebra on the
+  * interpreted and the codegen path, and the lanes that call it. */
+class DotProductRewriteSpec extends KernelParity {
 
-  private def ensure(): Unit = GraftExtensions.registerAll(spark)
-
-  private def optimizedPlan(df: DataFrame): String =
-    df.queryExecution.optimizedPlan.toString
-
-  private val floatPairs = Seq(
-    (Array(1.0f, 2.5f, -3.25f), Array(0.5f, -1.5f, 2.0f)),
-    (Array(0.1f, 0.2f, 0.3f), Array(0.7f, 0.8f, 0.9f)),
-    (Array.empty[Float], Array.empty[Float]),
-    (Array(1e-30f, -1e30f, 3.14159f), Array(1e30f, 1e-30f, 2.71828f)))
-
-  // Literal DataFrames collapse under ConvertToLocalRelation before any
-  // plan assertion can see the expression — plan-shape tests read parquet.
-  private def embeddings = graft.sources.Tables.embeddings(spark, sf)
-
-  test("HOF dot product over a parquet scan is rewritten to the native expression") {
-    ensure()
-    val df = embeddings
-      .select(Similarity.dot(col("embedding"), col("embedding")).as("d"))
-    val plan = optimizedPlan(df)
-    assert(plan.contains("dot_product"), s"rewrite did not fire:\n$plan")
-    assert(!plan.contains("aggregate("), s"HOF survived the rewrite:\n$plan")
-  }
+  private def dotHof(a: Column, b: Column): Column = Similarity.dot(a, b)
 
   test("rewritten result is bit-identical to the sequential widen-first fold (codegen path)") {
-    ensure()
     val rows = embeddings.limit(16)
       .select(col("embedding"),
-        Similarity.dot(col("embedding"), col("embedding")).as("d"))
+        dot_product(col("embedding"), col("embedding")).as("nat"),
+        dotHof(col("embedding"), col("embedding")).as("hof"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
-      val v = r.getSeq[Float](0)
       var acc = 0.0
-      v.foreach { x => acc += x.toDouble * x.toDouble }
-      assert(java.lang.Double.doubleToRawLongBits(r.getDouble(1)) ==
-        java.lang.Double.doubleToRawLongBits(acc),
-        s"bits differ: got ${r.getDouble(1)} want $acc")
+      r.getSeq[Float](0).foreach { x => acc += x.toDouble * x.toDouble }
+      assert(same(r.getDouble(1), acc), s"native ${r.getDouble(1)} != fold $acc")
+      assert(same(r.getDouble(2), acc), s"hof ${r.getDouble(2)} != fold $acc")
     }
   }
 
   test("null algebra matches zip_with/aggregate: unequal lengths, null element, null array, empty") {
-    ensure()
     import spark.implicits._
-    val df = Seq(
-      ("len_mismatch", Some(Seq(Some(1.0f), Some(2.0f))), Some(Seq(Some(1.0f)))),
-      ("null_elem", Some(Seq(Some(1.0f), None)), Some(Seq(Some(1.0f), Some(2.0f)))),
-      ("null_array", None, Some(Seq(Some(1.0f)))),
-      ("empty", Some(Seq.empty[Option[Float]]), Some(Seq.empty[Option[Float]])),
-      ("plain", Some(Seq(Some(2.0f), Some(3.0f))), Some(Seq(Some(4.0f), Some(5.0f)))))
+    val empty = Seq(("empty", Some(Seq.empty[Option[Float]]), Some(Seq.empty[Option[Float]])))
       .toDF("tag", "a", "b")
-    // Rewritten HOF and direct native form must agree row-for-row.
-    val out = df.select(col("tag"),
-        Similarity.dot(col("a"), col("b")).as("hof"),
-        graft.functions.VectorFunctions.dot_product(col("a"), col("b")).as("nat"))
-      .collect().map(r => r.getString(0) ->
-        (if (r.isNullAt(1)) null else r.getDouble(1),
-         if (r.isNullAt(2)) null else r.getDouble(2))).toMap
-    assert(out("len_mismatch") == ((null, null)))
-    assert(out("null_elem") == ((null, null)))
-    assert(out("null_array") == ((null, null)))
-    assert(out("empty") == ((0.0, 0.0)))
-    assert(out("plain") == ((23.0, 23.0)))
+    val out = parity(floatPairs.union(empty),
+      dot_product(col("a"), col("b")), dotHof(col("a"), col("b")))
+    assert(out("len_mismatch") == null)
+    assert(out("null_elem") == null)
+    assert(out("null_array") == null)
+    assert(same(out("empty"), 0.0))
+    assert(same(out("neg_zero"), 0.0))
+    assert(out("nan").asInstanceOf[Double].isNaN)
+    assert(out("plain") == 23.0)
   }
 
   test("null algebra holds on the CODEGEN path (repartition barrier defeats constant folding)") {
-    ensure()
     import spark.implicits._
     // Literal frames fold via interpreted eval (ConvertToLocalRelation) — a
     // repartition barrier forces the projection into whole-stage codegen, so
@@ -95,8 +59,8 @@ class DotProductRewriteSpec extends SparkSpec {
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
       val out = df.select(col("tag"),
-          graft.functions.VectorFunctions.dot_product(col("a"), col("b")).as("d"),
-          graft.functions.VectorFunctions.cosine_similarity(col("a"), col("b")).as("c"))
+          dot_product(col("a"), col("b")).as("d"),
+          VectorFunctions.cosine_similarity(col("a"), col("b")).as("c"))
         .collect().map(r => r.getString(0) ->
           (if (r.isNullAt(1)) null else r.getDouble(1),
            if (r.isNullAt(2)) null else r.getDouble(2))).toMap
@@ -110,35 +74,8 @@ class DotProductRewriteSpec extends SparkSpec {
     }
   }
 
-  test("guard: a -0.0 zero literal is NOT rewritten (empty-array sign differs)") {
-    ensure()
-    import spark.implicits._
-    val df = Seq((Array.empty[Float], Array.empty[Float])).toDF("a", "b")
-      .select(aggregate(
-        zip_with(col("a"), col("b"), (x, y) => x.cast("double") * y.cast("double")),
-        lit(-0.0), (acc, x) => acc + x).as("d"))
-    assert(!optimizedPlan(df).contains("dot_product"),
-      "rewrite fired on a -0.0 zero — empty-array fold sign would flip")
-    val got = df.collect()(0).getDouble(0)
-    assert(java.lang.Double.doubleToRawLongBits(got) ==
-      java.lang.Double.doubleToRawLongBits(-0.0))
-  }
-
-  test("guard: a float-rounding multiply (no widen-first cast) is NOT rewritten") {
-    ensure()
-    import spark.implicits._
-    // (a,b) -> a*b on float arrays rounds each product to FLOAT before the
-    // double sum — different bits than the native widen-first loop.
-    val df = Seq((Array(1.0000001f, 3.0f), Array(1.0000001f, 7.0f)))
-      .toDF("a", "b")
-      .select(aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
-        lit(0.0), (acc, x) => acc + x).as("d"))
-    assert(!optimizedPlan(df).contains("dot_product"),
-      "rewrite fired on a float-rounded multiply — values would change")
-  }
-
   test("dot_product SQL function registers and runs inside whole-stage codegen") {
-    ensure()
+    GraftExtensions.registerAll(spark)
     embeddings.createOrReplaceTempView("dp_emb")
     val prev = spark.conf.getOption("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
@@ -159,15 +96,8 @@ class DotProductRewriteSpec extends SparkSpec {
   }
 
   test("lanes built on the HOF shape get the native expression end-to-end") {
-    ensure()
-    // randomProject (q_vec_project) and the LSH bucketKey both write
-    // aggregate(zip_with(v, signs, (x, r) -> cast(x)*r), 0.0, +)
-    for (lane <- Seq("q_vec_project", "q_sim_topk_lsh")) {
-      val df = graft.SparkEntry.queries(lane)(spark, sf)
-      val plan = df.queryExecution.optimizedPlan.toString
-      assert(plan.contains("dot_product"),
-        s"$lane plan shows no dot_product:\n${plan.take(2000)}")
-      assert(df.count() > 0)
-    }
+    // randomProject (q_vec_project) and the LSH bucketKey call dot_product
+    for (lane <- Seq("q_vec_project", "q_sim_topk_lsh"))
+      assertLaneNative(lane, "dot_product")
   }
 }

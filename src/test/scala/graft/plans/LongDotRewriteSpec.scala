@@ -1,56 +1,27 @@
 package graft.plans
 
-import org.apache.spark.SparkException
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.{GraftExtensions, SparkSpec}
+import graft.functions.VectorFunctions.long_dot_product
 
-/** The integer-dot-product rewrite must preserve long arithmetic EXACTLY —
-  * including the overflow CONTRACT: ANSI throws ARITHMETIC_OVERFLOW, LEGACY
-  * wraps, and the two modes must each be reproduced by the native
-  * expression the rule emits under that mode. Null algebra (zip_with
-  * padding, null elements) matches the HOF fold. */
-class LongDotRewriteSpec extends SparkSpec {
+/** `long_dot_product` against the interpreted long HOF fold: exact long
+  * arithmetic, zip_with's null algebra, and the overflow CONTRACT — ANSI
+  * throws ARITHMETIC_OVERFLOW, LEGACY wraps — each reproduced under the
+  * mode in force when the column is built. */
+class LongDotRewriteSpec extends KernelParity {
 
-  private def ensure(): Unit = GraftExtensions.registerAll(spark)
-
-  private def optimizedPlan(df: DataFrame): String =
-    df.queryExecution.optimizedPlan.toString
-
-  private def embeddings = graft.sources.Tables.embeddings(spark, sf)
-
-  /** The SQ ANN scoring shape: aggregate(zip_with(a, b, _*_), 0L, _+_). */
-  private def hofDot(a: org.apache.spark.sql.Column,
-                     b: org.apache.spark.sql.Column) =
+  private def longDotHof(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
 
-  /** Bit-exact value twin the NARROW matcher refuses (x·y·1 is not the
-    * two-var product), so it genuinely stays a HOF — the parity reference. */
-  private def hofDotRef(a: org.apache.spark.sql.Column,
-                        b: org.apache.spark.sql.Column) =
-    aggregate(zip_with(a, b, (x, y) => x * y * lit(1L)), lit(0L),
-      (acc, x) => acc + x)
-
-  private def codes(c: org.apache.spark.sql.Column) =
+  private def codes(c: Column) =
     transform(c, x => floor(x.cast("double") * 100.0).cast("long"))
 
-  test("long HOF dot over a parquet scan is rewritten to the native expression") {
-    ensure()
-    val df = embeddings
-      .select(codes(col("embedding")).as("q"))
-      .select(hofDot(col("q"), col("q")).as("s"))
-    val plan = optimizedPlan(df)
-    assert(plan.contains("long_dot_product"), s"rewrite did not fire:\n$plan")
-    assert(!plan.contains("aggregate("), s"HOF survived the rewrite:\n$plan")
-  }
-
   test("values match the HOF fold exactly on fixture-derived codes") {
-    ensure()
     val rows = embeddings.limit(32)
       .select(codes(col("embedding")).as("q"))
-      .select(hofDot(col("q"), col("q")).as("nat"),
-        hofDotRef(col("q"), col("q")).as("hof"))
+      .select(long_dot_product(col("q"), col("q")).as("nat"),
+        longDotHof(col("q"), col("q")).as("hof"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getLong(0) == r.getLong(1),
@@ -58,7 +29,6 @@ class LongDotRewriteSpec extends SparkSpec {
   }
 
   test("null algebra: unequal lengths, null element, null array, empty") {
-    ensure()
     import spark.implicits._
     val df = Seq(
       ("len_mismatch", Some(Seq(Some(1L), Some(2L))), Some(Seq(Some(1L)))),
@@ -66,134 +36,84 @@ class LongDotRewriteSpec extends SparkSpec {
       ("null_array", None, Some(Seq(Some(1L)))),
       ("empty", Some(Seq.empty[Option[Long]]), Some(Seq.empty[Option[Long]])),
       ("plain", Some(Seq(Some(2L), Some(3L))), Some(Seq(Some(4L), Some(5L)))))
-      .toDF("tag", "a", "b").repartition(2)
-    val out = df.select(col("tag"),
-        hofDot(col("a"), col("b")).as("nat"),
-        hofDotRef(col("a"), col("b")).as("hof"))
-      .collect().map(r => r.getString(0) ->
-        (if (r.isNullAt(1)) null else r.getLong(1),
-         if (r.isNullAt(2)) null else r.getLong(2))).toMap
-    out.foreach { case (tag, (nat, hof)) =>
-      assert(nat == hof, s"$tag: native=$nat hof=$hof")
-    }
-    assert(out("plain")._1 == 23L)
-    assert(out("empty")._1 == 0L)
-    assert(out("len_mismatch")._1 == null)
+      .toDF("tag", "a", "b")
+    val out = parity(df,
+      long_dot_product(col("a"), col("b")), longDotHof(col("a"), col("b")))
+    assert(out("plain") == 23L)
+    assert(out("empty") == 0L)
+    assert(out("len_mismatch") == null)
+    assert(out("null_elem") == null)
+    assert(out("null_array") == null)
   }
 
   test("ANSI overflow: rewritten form throws the same ARITHMETIC_OVERFLOW as the HOF") {
-    ensure()
-    assume(spark.conf.get("spark.sql.ansi.enabled") == "true")
     import spark.implicits._
-    val big = Seq((Seq(Long.MaxValue, 1L), Seq(2L, 1L))).toDF("a", "b")
-      .repartition(1)
-    def condition(t: Throwable): String = {
-      var c = t
-      while (c != null) {
-        c match {
-          case s: org.apache.spark.SparkThrowable if s.getCondition != null =>
-            return s.getCondition
-          case _ =>
-        }
-        c = c.getCause
+    withAnsi(on = true) {
+      val big = Seq((Seq(Long.MaxValue, 1L), Seq(2L, 1L))).toDF("a", "b")
+        .repartition(1)
+      val natErr = intercept[Throwable] {
+        big.select(long_dot_product(col("a"), col("b"))).collect()
       }
-      "none"
+      val hofErr = intercept[Throwable] {
+        big.select(longDotHof(col("a"), col("b"))).collect()
+      }
+      assert(condition(natErr) == "ARITHMETIC_OVERFLOW", s"native: $natErr")
+      assert(condition(hofErr) == "ARITHMETIC_OVERFLOW", s"hof: $hofErr")
     }
-    val natErr = intercept[Throwable] {
-      big.select(hofDot(col("a"), col("b"))).collect()
-    }
-    val hofErr = intercept[Throwable] {
-      big.select(hofDotRef(col("a"), col("b"))).collect()
-    }
-    assert(condition(natErr) == "ARITHMETIC_OVERFLOW", s"native: $natErr")
-    assert(condition(hofErr) == "ARITHMETIC_OVERFLOW", s"hof: $hofErr")
   }
 
   test("ANSI failure path: overflow PAST a null element / under a length mismatch still throws like the HOF") {
-    ensure()
-    assume(spark.conf.get("spark.sql.ansi.enabled") == "true")
     import spark.implicits._
-    def condition(t: Throwable): String = {
-      var c = t
-      while (c != null) {
-        c match {
-          case s: org.apache.spark.SparkThrowable if s.getCondition != null =>
-            return s.getCondition
-          case _ =>
+    withAnsi(on = true) {
+      // zip_with evaluates every overlap product, so an overflow AFTER a
+      // null element throws in the HOF — the native expression scans the
+      // full overlap too instead of short-circuiting to null
+      val nullThenOverflow =
+        Seq((Seq(Option.empty[Long], Some(Long.MaxValue)),
+             Seq(Some(1L), Some(Long.MaxValue)))).toDF("a", "b").repartition(1)
+      // ...and likewise under a length mismatch: the pad nulls the RESULT
+      // but overlap products still evaluate
+      val mismatchOverflow =
+        Seq((Seq(Long.MaxValue), Seq(Long.MaxValue, 5L))).toDF("a", "b")
+          .repartition(1)
+      for ((df, tag) <- Seq((nullThenOverflow, "null_then_overflow"),
+                            (mismatchOverflow, "mismatch_overflow"))) {
+        val natErr = intercept[Throwable] {
+          df.select(long_dot_product(col("a"), col("b"))).collect()
         }
-        c = c.getCause
+        val hofErr = intercept[Throwable] {
+          df.select(longDotHof(col("a"), col("b"))).collect()
+        }
+        assert(condition(natErr) == "ARITHMETIC_OVERFLOW", s"$tag native: $natErr")
+        assert(condition(hofErr) == "ARITHMETIC_OVERFLOW", s"$tag hof: $hofErr")
       }
-      "none"
+      // and the non-overflowing variants of the same shapes agree on null
+      val benign = Seq(
+        ("null_then_ok", Seq(Option.empty[Long], Some(2L)), Seq(Some(1L), Some(3L))),
+        ("mismatch_ok", Seq(Some(2L)), Seq(Some(3L), Some(4L))))
+        .toDF("tag", "a", "b")
+      parity(benign, long_dot_product(col("a"), col("b")),
+          longDotHof(col("a"), col("b")))
+        .foreach { case (tag, v) => assert(v == null, s"$tag: expected null") }
     }
-    // zip_with evaluates every overlap product, so an overflow AFTER a null
-    // element throws in the HOF — the native expression must scan the full
-    // overlap too, not short-circuit to null at the first null (the round-9
-    // form silently returned null here)
-    val nullThenOverflow =
-      Seq((Seq(Option.empty[Long], Some(Long.MaxValue)),
-           Seq(Some(1L), Some(Long.MaxValue)))).toDF("a", "b").repartition(1)
-    // ...and likewise under a length mismatch: the pad nulls the RESULT but
-    // overlap products still evaluate
-    val mismatchOverflow =
-      Seq((Seq(Long.MaxValue), Seq(Long.MaxValue, 5L))).toDF("a", "b")
-        .repartition(1)
-    for ((df, tag) <- Seq((nullThenOverflow, "null_then_overflow"),
-                          (mismatchOverflow, "mismatch_overflow"))) {
-      val natErr = intercept[Throwable] {
-        df.select(hofDot(col("a"), col("b"))).collect()
-      }
-      val hofErr = intercept[Throwable] {
-        df.select(hofDotRef(col("a"), col("b"))).collect()
-      }
-      assert(condition(natErr) == "ARITHMETIC_OVERFLOW", s"$tag native: $natErr")
-      assert(condition(hofErr) == "ARITHMETIC_OVERFLOW", s"$tag hof: $hofErr")
-    }
-    // and the non-overflowing variants of the same shapes agree on null
-    val benign = Seq(
-      ("null_then_ok", Seq(Option.empty[Long], Some(2L)), Seq(Some(1L), Some(3L))),
-      ("mismatch_ok", Seq(Some(2L)), Seq(Some(3L), Some(4L))))
-      .toDF("tag", "a", "b").repartition(1)
-    benign.select(col("tag"), hofDot(col("a"), col("b")).as("nat"),
-        hofDotRef(col("a"), col("b")).as("hof"))
-      .collect().foreach { r =>
-        assert(r.isNullAt(1) && r.isNullAt(2), s"${r.getString(0)}: expected null/null")
-      }
   }
 
   test("LEGACY overflow: rewritten form wraps exactly like the HOF") {
-    ensure()
     import spark.implicits._
-    val prev = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try {
+    // the overflow mode is read when the column is built, as the HOF's
+    // Multiply/Add read it — so both columns are built inside the block
+    withAnsi(on = false) {
       val big = Seq((Seq(Long.MaxValue, 3L), Seq(2L, 5L))).toDF("a", "b")
         .repartition(1)
-      val r = big.select(hofDot(col("a"), col("b")).as("nat"),
-        hofDotRef(col("a"), col("b")).as("hof")).head()
+      val r = big.select(long_dot_product(col("a"), col("b")).as("nat"),
+        longDotHof(col("a"), col("b")).as("hof")).head()
       // Long.MaxValue*2 wraps to -2; -2+15 = 13
       assert(r.getLong(0) == r.getLong(1))
       assert(r.getLong(0) == Long.MaxValue * 2L + 15L)
-    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
-  }
-
-  test("guard: a TRY-mode multiply is NOT rewritten") {
-    ensure()
-    import spark.implicits._
-    // try_multiply nulls on overflow — LongDotProduct has no such mode
-    val df = Seq((Seq(1L, 2L), Seq(3L, 4L))).toDF("a", "b").repartition(1)
-      .select(aggregate(
-        zip_with(col("a"), col("b"), (x, y) => try_multiply(x, y)),
-        lit(0L), (acc, x) => acc + x).as("s"))
-    assert(!optimizedPlan(df).contains("long_dot_product"),
-      "rewrite fired on a TRY-mode multiply — null-on-overflow would be lost")
+    }
   }
 
   test("the SQ ANN lane gets the native scoring loop end-to-end") {
-    ensure()
-    val df = graft.SparkEntry.queries("q_sim_topk_sq")(spark, sf)
-    val plan = df.queryExecution.optimizedPlan.toString
-    assert(plan.contains("long_dot_product"),
-      s"q_sim_topk_sq plan shows no long_dot_product:\n${plan.take(2000)}")
-    assert(df.count() > 0)
+    assertLaneNative("q_sim_topk_sq", "long_dot_product")
   }
 }

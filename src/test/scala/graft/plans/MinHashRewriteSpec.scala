@@ -1,52 +1,24 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{GraftExtensions, SparkSpec}
 import graft.operators.NearDup
+import graft.functions.TextHashFunctions.minhash_signature
 
-/** The minhash-HOF rewrite must reproduce the portable form exactly:
+/** `minhash_signature` against the portable HOF `NearDup.minhashSigHof`:
   * identical signatures on real shingle sets (hex-string min == raw-byte
   * min), null shingles skipped, empty/all-null arrays giving all-null
-  * signatures, and a NULL shingle ARRAY yielding `[null × k]` (the outer
-  * transform still iterates) — handled by MinHashSignature's
-  * `nullAsAllNull` flag, NOT an `If(IsNull(sh), …)` guard, because the
-  * guard would duplicate the (usually inline, post-CollapseProject)
-  * shingles chain and evaluate it twice per row. */
-class MinHashRewriteSpec extends SparkSpec {
+  * signatures — and the one divergence, a NULL shingle array: NULL from
+  * the native expression, `[null × k]` from the HOF. */
+class MinHashRewriteSpec extends KernelParity {
 
-  private def ensure(): Unit = GraftExtensions.registerAll(spark)
-
-  private def optimizedPlan(df: DataFrame): String =
-    df.queryExecution.optimizedPlan.toString
-
-  private def documents = graft.sources.Tables.documents(spark, sf)
-
-  /** Bit-exact value twin the matcher refuses (nested concat instead of the
-    * 3-ary form — string concatenation is associative so values are
-    * identical), so it genuinely stays a HOF — the parity reference. */
-  private def minhashRef(sh: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    transform(sequence(lit(0), lit(NearDup.NumHashes - 1)),
-      s => array_min(transform(sh,
-        x => md5(concat(concat(s.cast("string"), lit("_")), x)))))
-
-  test("minhash HOF over a parquet scan is rewritten to minhash_signature") {
-    ensure()
-    val df = documents
-      .select(NearDup.shingles(col("text")).as("sh"))
-      .select(NearDup.minhashSigHof(col("sh")).as("sig"))
-    val plan = optimizedPlan(df)
-    assert(plan.contains("minhash_signature"), s"rewrite did not fire:\n$plan")
-    assert(!plan.contains("array_min"), s"HOF survived the rewrite:\n$plan")
-  }
+  private def docShingles = graft.sources.Tables.documents(spark, sf)
+    .select(col("doc_id"), NearDup.shingles(col("text")).as("sh"))
 
   test("signatures match the portable HOF on real shingle sets") {
-    ensure()
-    val rows = documents.limit(24)
-      .select(NearDup.shingles(col("text")).as("sh"))
-      .select(NearDup.minhashSigHof(col("sh")).as("nat"),
-        minhashRef(col("sh")).as("ref"))
+    val rows = docShingles.limit(24)
+      .select(minhash_signature(col("sh"), NearDup.NumHashes).as("nat"),
+        NearDup.minhashSigHof(col("sh")).as("hof"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -56,7 +28,6 @@ class MinHashRewriteSpec extends SparkSpec {
   }
 
   test("edge algebra: null array -> [null x k]; empty/all-null -> all-null signature; null shingles skipped") {
-    ensure()
     import spark.implicits._
     val df = Seq(
       ("null_array", None),
@@ -64,66 +35,20 @@ class MinHashRewriteSpec extends SparkSpec {
       ("all_null", Some(Seq[Option[String]](None, None))),
       ("null_skipped", Some(Seq(Some("alpha"), None, Some("beta")))),
       ("clean", Some(Seq(Some("alpha"), Some("beta")))))
-      .toDF("tag", "sh").repartition(2)
-    val out = df.select(col("tag"),
-        NearDup.minhashSigHof(col("sh")).as("nat"),
-        minhashRef(col("sh")).as("ref"))
-      .collect().map(r => r.getString(0) ->
-        (if (r.isNullAt(1)) null else r.getSeq[String](1),
-         if (r.isNullAt(2)) null else r.getSeq[String](2))).toMap
-    out.foreach { case (tag, (nat, ref)) =>
-      assert(nat == ref, s"$tag:\n  rewritten=$nat\n  hof=$ref")
-    }
+      .toDF("tag", "sh")
+    val out = both(df, minhash_signature(col("sh"), NearDup.NumHashes),
+      NearDup.minhashSigHof(col("sh")))
     val k = NearDup.NumHashes
-    // the If-guard corner: outer transform iterates even when sh is NULL
-    assert(out("null_array")._1 == Seq.fill(k)(null),
-      "NULL shingle array must yield [null x k], not NULL")
+    out.removed("null_array").foreach { case (tag, (nat, hof)) =>
+      assert(nat == hof, s"$tag:\n  native=$nat\n  hof=$hof")
+    }
     assert(out("empty")._1 == Seq.fill(k)(null))
     assert(out("all_null")._1 == Seq.fill(k)(null))
     // null shingles are skipped: same signature as without them
     assert(out("null_skipped")._1 == out("clean")._1)
-    assert(out("clean")._1.forall(_ != null))
-  }
-
-  test("nullable inline shingles chain rewrites WITHOUT duplicating the chain") {
-    ensure()
-    // post-CollapseProject the HOF's input is the inline shingles transform
-    // chain over the (nullable) parquet text column — the rewrite must fire
-    // via the nullAsAllNull flag, with no If(isnull(sh), …) guard and the
-    // chain appearing exactly once in the optimized plan
-    val df = documents
-      .select(NearDup.shingles(col("text")).as("sh"))
-      .select(NearDup.minhashSigHof(col("sh")).as("sig"))
-    val plan = optimizedPlan(df)
-    assert(plan.contains("minhash_signature"), s"rewrite did not fire:\n$plan")
-    // the shingles chain is sort_array(word_grams(text)); a duplicated
-    // operand would show it twice
-    val chainCount = "word_grams".r.findAllIn(plan).size
-    assert(chainCount == 1,
-      s"shingles chain appears $chainCount times (expected 1 — no duplication):\n$plan")
-    assert(!plan.toLowerCase.contains("if (isnull"),
-      s"If(IsNull…) guard survived — should be the nullAsAllNull flag:\n$plan")
-  }
-
-  test("guard: a descending sequence (negative stop) is NOT rewritten") {
-    ensure()
-    val df = documents.limit(1)
-      .select(NearDup.shingles(col("text")).as("sh"))
-      .select(transform(sequence(lit(0), lit(-1)),
-        s => array_min(transform(col("sh"),
-          x => md5(concat(s.cast("string"), lit("_"), x))))).as("sig"))
-    assert(!optimizedPlan(df).contains("minhash_signature"),
-      "rewrite fired on a descending seed sequence")
-  }
-
-  test("guard: a different seed separator is NOT rewritten") {
-    ensure()
-    val df = documents.limit(1)
-      .select(NearDup.shingles(col("text")).as("sh"))
-      .select(transform(sequence(lit(0), lit(15)),
-        s => array_min(transform(col("sh"),
-          x => md5(concat(s.cast("string"), lit(":"), x))))).as("sig"))
-    assert(!optimizedPlan(df).contains("minhash_signature"),
-      "rewrite fired on a ':' separator — different hash family")
+    assert(out("clean")._1.asInstanceOf[scala.collection.Seq[String]].forall(_ != null))
+    // NULL in, NULL out — the one input where the HOF differs: its outer
+    // transform iterates the seed range even over a NULL shingle array
+    assert(out("null_array") == ((null, Seq.fill(k)(null))))
   }
 }

@@ -1,107 +1,49 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.{GraftExtensions, SparkSpec}
+import graft.functions.VectorFunctions.sum_squares
 
-/** The sum-of-squares rewrite must be INVISIBLE except for speed: the
-  * single-array fold's exact value/null algebra (null element poisons,
-  * empty array folds to the +0.0 zero), widen-first float squaring, and
-  * guards refusing −0.0 zeros and float-rounded squares. */
-class SumSquaresRewriteSpec extends SparkSpec {
+/** `sum_squares` against the interpreted widen-first single-array fold:
+  * bit-identical values and the fold's null algebra (null element poisons,
+  * empty array folds to +0.0, null array nulls), -0.0 and NaN. */
+class SumSquaresRewriteSpec extends KernelParity {
 
-  private def ensure(): Unit = GraftExtensions.registerAll(spark)
-
-  private def optimizedPlan(df: DataFrame): String =
-    df.queryExecution.optimizedPlan.toString
-
-  private def embeddings = graft.sources.Tables.embeddings(spark, sf)
-
-  /** The l2Norm fold shape. */
-  private def ssHof(v: org.apache.spark.sql.Column) =
-    aggregate(v, lit(0.0),
-      (a, x) => a + x.cast("double") * x.cast("double"))
-
-  /** Bit-exact twin the matcher refuses (·1.0 on the square — float
-    * multiply-by-one is NOT simplified by the optimizer, unlike integral). */
-  private def ssHofPinned(v: org.apache.spark.sql.Column) =
-    aggregate(v, lit(0.0),
-      (a, x) => a + x.cast("double") * x.cast("double") * lit(1.0))
-
-  test("the l2Norm fold over a parquet scan is rewritten to sum_squares") {
-    ensure()
-    val df = embeddings.select(
-      graft.operators.VectorOps.l2Norm(col("embedding")).as("n"))
-    val plan = optimizedPlan(df)
-    assert(plan.contains("sum_squares"), s"rewrite did not fire:\n$plan")
-    assert(!plan.contains("aggregate("), s"HOF survived the rewrite:\n$plan")
-  }
+  private def sumSquaresHof(v: Column): Column =
+    aggregate(v, lit(0.0), (a, x) => a + x.cast("double") * x.cast("double"))
 
   test("values bit-identical to the sequential widen-first fold") {
-    ensure()
     val rows = embeddings.limit(16)
-      .select(ssHof(col("embedding")).as("nat"),
-        ssHofPinned(col("embedding")).as("hof"))
+      .select(sum_squares(col("embedding")).as("nat"),
+        sumSquaresHof(col("embedding")).as("hof"))
       .collect()
     assert(rows.nonEmpty)
-    rows.foreach { r =>
-      assert(java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ==
-        java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
-        s"bits differ: ${r.getDouble(0)} vs ${r.getDouble(1)}")
-    }
+    rows.foreach(r => assert(same(r.getDouble(0), r.getDouble(1)),
+      s"bits differ: ${r.getDouble(0)} vs ${r.getDouble(1)}"))
   }
 
   test("null algebra: null element poisons, empty folds to +0.0, null array nulls") {
-    ensure()
     import spark.implicits._
     val df = Seq(
       ("null_elem", Some(Seq(Some(1.0f), None))),
       ("empty", Some(Seq.empty[Option[Float]])),
       ("null_array", None),
+      ("neg_zero", Some(Seq(Some(-0.0f)))),
+      ("nan", Some(Seq(Some(1.0f), Some(Float.NaN)))),
       ("plain", Some(Seq(Some(3.0f), Some(4.0f)))))
-      .toDF("tag", "v").repartition(2)
-    val out = df.select(col("tag"),
-        ssHof(col("v")).as("nat"), ssHofPinned(col("v")).as("hof"))
-      .collect().map(r => r.getString(0) ->
-        (if (r.isNullAt(1)) null else r.getDouble(1),
-         if (r.isNullAt(2)) null else r.getDouble(2))).toMap
-    out.foreach { case (tag, (nat, hof)) =>
-      assert(nat == hof, s"$tag: native=$nat hof=$hof")
-    }
-    assert(out("plain")._1 == 25.0)
-    assert(out("empty")._1 == 0.0)
-    assert(out("null_elem")._1 == null)
-    assert(out("null_array")._1 == null)
-  }
-
-  test("guard: a -0.0 zero literal is NOT rewritten (empty-array sign differs)") {
-    ensure()
-    import spark.implicits._
-    val df = Seq(Tuple1(Array.empty[Float])).toDF("v").repartition(1)
-      .select(aggregate(col("v"), lit(-0.0),
-        (a, x) => a + x.cast("double") * x.cast("double")).as("s"))
-    assert(!optimizedPlan(df).contains("sum_squares"),
-      "rewrite fired on a -0.0 zero — empty-array fold sign would flip")
-  }
-
-  test("guard: a float-rounding square (no widen-first cast) is NOT rewritten") {
-    ensure()
-    import spark.implicits._
-    val df = Seq(Tuple1(Array(1.0000001f))).toDF("v").repartition(1)
-      .select(aggregate(col("v"), lit(0.0), (a, x) => a + x * x).as("s"))
-    assert(!optimizedPlan(df).contains("sum_squares"),
-      "rewrite fired on a float-rounded square — values would change")
+      .toDF("tag", "v")
+    val out = parity(df, sum_squares(col("v")), sumSquaresHof(col("v")))
+    assert(out("plain") == 25.0)
+    assert(same(out("empty"), 0.0))
+    assert(same(out("neg_zero"), 0.0))
+    assert(out("nan").asInstanceOf[Double].isNaN)
+    assert(out("null_elem") == null)
+    assert(out("null_array") == null)
   }
 
   test("lanes built on the l2Norm/Parseval shape get the native expression end-to-end") {
-    ensure()
-    for (lane <- Seq("q_vec_quantize", "q_pca_project")) {
-      val df = graft.SparkEntry.queries(lane)(spark, sf)
-      val plan = df.queryExecution.optimizedPlan.toString
-      assert(plan.contains("sum_squares"),
-        s"$lane plan shows no sum_squares:\n${plan.take(2000)}")
-      assert(df.count() > 0)
-    }
+    for (lane <- Seq("q_vec_quantize", "q_pca_project", "q_vec_norm_audit"))
+      assertLaneNative(lane, "sum_squares")
   }
 }

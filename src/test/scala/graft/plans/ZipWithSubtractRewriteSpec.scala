@@ -1,118 +1,54 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.{GraftExtensions, SparkSpec}
+import graft.functions.VectorFunctions.zip_subtract
 
-/** The zip_with-subtract→native rewrite must be INVISIBLE except for speed:
-  * zip_with's exact padding/null algebra (unequal lengths PAD with null, not
-  * truncate and not poison), bit-identical doubles, and guards that leave
-  * non-matching shapes (reversed operand order, float-rounded subtraction)
-  * alone. */
-class ZipWithSubtractRewriteSpec extends SparkSpec {
+/** `zip_subtract` against the interpreted `zip_with(a, b, _ − _)` over
+  * double-cast operands: zip_with's exact padding/null algebra (unequal
+  * lengths PAD with null — no truncation, no poisoning), widen-first
+  * floats, -0.0 and NaN. */
+class ZipWithSubtractRewriteSpec extends KernelParity {
 
-  private def ensure(): Unit = GraftExtensions.registerAll(spark)
-
-  private def optimizedPlan(df: DataFrame): String =
-    df.queryExecution.optimizedPlan.toString
-
-  private def embeddings = graft.sources.Tables.embeddings(spark, sf)
-
-  test("residual zip_with over a parquet scan is rewritten to zip_subtract") {
-    ensure()
-    val df = embeddings.select(
-      zip_with(col("embedding").cast("array<double>"),
-        col("embedding").cast("array<double>"), (x, c) => x - c).as("r"))
-    val plan = optimizedPlan(df)
-    assert(plan.contains("zip_subtract"), s"rewrite did not fire:\n$plan")
-    assert(!plan.contains("zip_with"), s"HOF survived the rewrite:\n$plan")
-  }
+  private def zipSubtractHof(a: Column, b: Column): Column =
+    zip_with(a, b, (x, y) => x.cast("double") - y.cast("double"))
 
   test("padding/null algebra matches zip_with exactly (interpreted + codegen)") {
-    ensure()
     import spark.implicits._
-    val base = Seq(
+    val df = Seq(
       ("pad_left", Some(Seq(Some(1.0), Some(2.0))), Some(Seq(Some(10.0)))),
       ("pad_right", Some(Seq(Some(1.0))), Some(Seq(Some(10.0), Some(20.0)))),
       ("null_elem", Some(Seq(Some(1.0), None)), Some(Seq(Some(10.0), Some(20.0)))),
       ("null_array", None, Some(Seq(Some(1.0)))),
       ("empty", Some(Seq.empty[Option[Double]]), Some(Seq.empty[Option[Double]])),
+      ("neg_zero", Some(Seq(Some(-0.0))), Some(Seq(Some(0.0)))),
+      ("nan", Some(Seq(Some(Double.NaN))), Some(Seq(Some(1.0)))),
       ("plain", Some(Seq(Some(5.0), Some(7.0))), Some(Seq(Some(1.0), Some(2.0)))))
       .toDF("tag", "a", "b")
-    // repartition barrier: forces codegen for the native; HOF stays
-    // interpreted either way — the comparison is native vs HOF recipe.
-    // The reference lambda multiplies y by 1.0 — a bit-exact identity for
-    // every double (including -0.0/NaN) that the NARROW matcher refuses,
-    // so the reference column genuinely stays a zip_with, not a second
-    // rewritten copy of the expression under test.
-    for (df <- Seq(base, base.repartition(2))) {
-      val out = df.select(col("tag"),
-          graft.functions.VectorFunctions.zip_subtract(col("a"), col("b")).as("nat"),
-          zip_with(col("a"), col("b"), (x, y) => x - y * lit(1.0)).as("hof"))
-        .collect().map(r => r.getString(0) ->
-          (if (r.isNullAt(1)) null else r.getSeq[Any](1),
-           if (r.isNullAt(2)) null else r.getSeq[Any](2))).toMap
-      out.foreach { case (tag, (nat, hof)) =>
-        assert(nat == hof, s"$tag: native=$nat hof=$hof")
-      }
-      // the padding contract specifically: max-length output, null tail
-      assert(out("pad_left")._1 == Seq(-9.0, null))
-      assert(out("pad_right")._1 == Seq(-9.0, null))
-      assert(out("null_elem")._1 == Seq(-9.0, null))
-      assert(out("null_array")._1 == null)
-      assert(out("empty")._1 == Seq.empty)
-      assert(out("plain")._1 == Seq(4.0, 5.0))
-    }
+    val out = parity(df, zip_subtract(col("a"), col("b")),
+      zipSubtractHof(col("a"), col("b")))
+    // the padding contract specifically: max-length output, null tail
+    assert(out("pad_left") == Seq(-9.0, null))
+    assert(out("pad_right") == Seq(-9.0, null))
+    assert(out("null_elem") == Seq(-9.0, null))
+    assert(out("null_array") == null)
+    assert(out("empty") == Seq.empty)
+    assert(same(out("neg_zero"), Seq(-0.0)))
+    assert(out("plain") == Seq(4.0, 5.0))
   }
 
   test("float inputs widen to double BEFORE subtracting, bit-identical to the HOF") {
-    ensure()
     import spark.implicits._
-    val df = Seq((Array(1.0000001f, 3.0f), Array(0.0000002f, 7.0f)))
-      .toDF("a", "b")
-    val r = df.select(
-      graft.functions.VectorFunctions.zip_subtract(col("a"), col("b")).as("nat"),
-      zip_with(col("a").cast("array<double>"), col("b").cast("array<double>"),
-        (x, y) => x - y * lit(1.0)).as("hof")).head()
-    val nat = r.getSeq[Double](0)
-    val hof = r.getSeq[Double](1)
-    nat.zip(hof).foreach { case (n, h) =>
-      assert(java.lang.Double.doubleToRawLongBits(n) ==
-        java.lang.Double.doubleToRawLongBits(h), s"bits differ: $n vs $h")
-    }
-  }
-
-  test("guard: reversed operand order (y - x) is NOT rewritten") {
-    ensure()
-    val df = embeddings.select(
-      zip_with(col("embedding").cast("array<double>"),
-        col("embedding").cast("array<double>"), (x, c) => c - x).as("r"))
-    val plan = optimizedPlan(df)
-    // c - x is NOT ZipSubtract(l, r) — subtraction does not commute; the
-    // matcher requires the lambda vars in zip order
-    assert(!plan.contains("zip_subtract"),
-      s"rewrite fired on a reversed subtraction:\n$plan")
-  }
-
-  test("guard: a float-typed subtraction (rounds before widening) is NOT rewritten") {
-    ensure()
-    import spark.implicits._
-    val df = Seq((Array(1.0f), Array(2.0f))).toDF("a", "b")
-      .repartition(1) // defeat ConvertToLocalRelation so the plan is visible
-      .select(zip_with(col("a"), col("b"), (x, y) => x - y).as("r"))
-    assert(!optimizedPlan(df).contains("zip_subtract"),
-      "rewrite fired on float - float — result element type would change")
+    val df = Seq(("f", Array(1.0000001f, 3.0f), Array(0.0000002f, 7.0f)))
+      .toDF("tag", "a", "b")
+    val out = parity(df, zip_subtract(col("a"), col("b")),
+      zipSubtractHof(col("a"), col("b")))
+    assert(same(out("f"), Seq(1.0000001f.toDouble - 0.0000002f.toDouble, -4.0)))
   }
 
   test("RPQ lanes get the native residual end-to-end") {
-    ensure()
-    for (lane <- Seq("q_vec_rpq", "q_sim_topk_ivfrpq")) {
-      val df = graft.SparkEntry.queries(lane)(spark, sf)
-      val plan = df.queryExecution.optimizedPlan.toString
-      assert(plan.contains("zip_subtract"),
-        s"$lane plan shows no zip_subtract:\n${plan.take(2000)}")
-      assert(df.count() > 0)
-    }
+    for (lane <- Seq("q_vec_rpq", "q_sim_topk_ivfrpq"))
+      assertLaneNative(lane, "zip_subtract")
   }
 }
