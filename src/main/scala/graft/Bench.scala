@@ -129,129 +129,45 @@ object Bench {
         val (a, b) = selectedAlpha.splitAt(selectedAlpha.size / 2); b ++ a
       case _ => selectedAlpha
     }
-    // Memoized-kernel attribution (round-9): without this, the curation
-    // KERNEL's multi-second build lands on whichever memo-consuming lane
-    // runs first alphabetically and q_curation reports a sub-0.1 s memo
-    // hit. Warm the kernel once UNTIMED so every other lane measures its
-    // marginal work; q_curation resets the memo before each timed
-    // iteration below, so it owns the kernel build (iter spread ~1).
-    val curationMemoLanes = Set("q_curation", "q_curation_v2",
-      "q_curation_v3", "q_curation_v4", "q_curation_v5", "q_curation_v6")
-    if (selected.exists(s => curationMemoLanes.contains(s._1)))
-      graft.operators.CurationPipeline.warmKernel(spark, sfDir)
-    // same discipline for round 11's two new shared frames: the co-purchase
-    // edge CTE (owner q_triangle_count) and the BPE train state (owner
-    // q_bpe_merges) — warm untimed, reset before the owner's iterations
-    val edgeMemoLanes = Set("q_triangle_count", "q_label_prop", "q_kcore")
-    if (selected.exists(s => edgeMemoLanes.contains(s._1)))
-      SparkEntry.warmCoPurchaseEdges(spark, sfDir)
-    val bpeMemoLanes = Set("q_bpe_merges", "q_bpe_apply")
-    if (selected.exists(s => bpeMemoLanes.contains(s._1)))
-      graft.operators.BpeTrainer.warmShared(
-        graft.sources.Tables.documents(spark, sfDir), key = sfDir)
-    val covMemoLanes = Set("q_cov_matrix", "q_pca_project")
-    if (selected.exists(s => covMemoLanes.contains(s._1)))
-      SparkEntry.warmEmbeddingCov(spark, sfDir)
-    // round-12: the trained IVF coarse quantizer (owner q_vec_clusters) —
-    // these eight lanes train the identical (8,1) quantizer on the same
-    // corpus (q_vec_assign_new also trains one but on its history SUBSET,
-    // deliberately outside the memo — see IvfIndex.assignNewBatch)
-    val ivfMemoLanes = Set("q_vec_clusters", "q_sim_topk_ivf",
-      "q_sim_topk_ivfpq", "q_sim_topk_ivfrpq", "q_vec_rpq",
-      "q_ivf_recall_report", "q_hard_negatives_ivf", "q_dedup_semantic")
-    if (selected.exists(s => ivfMemoLanes.contains(s._1)))
-      graft.operators.IvfIndex.warmCoarse(
-        graft.sources.Tables.embeddings(spark, sfDir), key = sfDir)
-    // round-13: the admission funnel run (owner q_curation_incr) — the
-    // report lane is a per-stage aggregate over the SAME funnel output
-    val admMemoLanes = Set("q_curation_incr", "q_admission_report")
-    if (selected.exists(s => admMemoLanes.contains(s._1)))
-      graft.operators.CurationPipeline.warmAdmission(spark, sfDir)
-    // round-13: the trained PQ codebooks — three lanes train the identical
-    // raw-vector codebook (owner q_vec_pq), two the identical residual
-    // codebook under the shared coarse quantizer (owner q_vec_rpq)
-    val pqRawMemoLanes = Set("q_vec_pq", "q_vec_adc", "q_sim_topk_ivfpq")
-    val pqResMemoLanes = Set("q_vec_rpq", "q_sim_topk_ivfrpq")
-    // per-basis warm (round-14 ADVICE): selecting only raw-basis lanes no
-    // longer pays the residual+coarse training, and vice versa
-    val needPqRaw = selected.exists(s => pqRawMemoLanes.contains(s._1))
-    val needPqRes = selected.exists(s => pqResMemoLanes.contains(s._1))
-    if (needPqRaw || needPqRes)
-      graft.operators.PqIndex.warmCodebooks(
-        graft.sources.Tables.embeddings(spark, sfDir), key = sfDir,
-        warmRaw = needPqRaw, warmResidual = needPqRes)
-    // round-12: the CF co-occurrence model (owner q_cf_similarity) — the
-    // similarity and recommendation lanes build the identical pair table
-    val cfMemoLanes = Set("q_cf_similarity", "q_cf_recommend")
-    def cfBaskets() = {
-      import org.apache.spark.sql.functions.col
-      graft.sources.Tables.orders(spark, sfDir)
-        .select("o_orderkey", "o_custkey")
-        .join(graft.sources.Tables.lineitem(spark, sfDir)
-            .select("l_orderkey", "l_suppkey"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-    }
-    if (selected.exists(s => cfMemoLanes.contains(s._1)))
-      graft.operators.Graph.warmCoState(cfBaskets(), key = sfDir,
-        basketCol = "cust", itemCol = "supp")
-    // round-12: the exact table profile (owner q_table_profile) — the
-    // approx lane reads it as its oracle-checked ground truth
-    val profileMemoLanes = Set("q_table_profile", "q_table_profile_approx")
-    if (selected.exists(s => profileMemoLanes.contains(s._1)))
-      graft.operators.Profile.warmProfile(
-        graft.sources.Tables.lineitem(spark, sfDir), key = s"$sfDir#lineitem")
-    // round-12: the verified edit-distance pair table (owner
-    // q_dedup_editdist) — the survivors lane clusters the same evidence
-    val edMemoLanes = Set("q_dedup_editdist", "q_dedup_editdist_survivors")
-    if (selected.exists(s => edMemoLanes.contains(s._1)))
-      graft.operators.NearDup.warmEditDistancePairs(
-        graft.sources.Tables.documents(spark, sfDir), key = sfDir)
+    // Shared-state attribution: warm every selected lane's shared state
+    // once UNTIMED, so consumers measure their marginal work; each owner
+    // resets its states before every timed run (see [[stateOwners]]).
+    val selectedNames = selected.map(_._1).toSet
+    stateOwners.filter(_.lanes.exists(selectedNames))
+      .foreach(_.warm(spark, sfDir))
     // A consumer lane benched WITHOUT its owner measures marginal work over
-    // a warm memo that is never reset — a fine number for plan iteration,
+    // a warm state that is never reset — a fine number for plan iteration,
     // but NOT comparable to full-suite or reference figures where the owner
     // pays the build. Say so loudly and flag it in the artifact.
-    val memoOwners = Map(
-      "q_curation" -> curationMemoLanes, "q_triangle_count" -> edgeMemoLanes,
-      "q_bpe_merges" -> bpeMemoLanes, "q_cov_matrix" -> covMemoLanes,
-      "q_vec_clusters" -> ivfMemoLanes, "q_cf_similarity" -> cfMemoLanes,
-      "q_table_profile" -> profileMemoLanes,
-      "q_dedup_editdist" -> edMemoLanes,
-      "q_vec_pq" -> pqRawMemoLanes, "q_vec_rpq" -> pqResMemoLanes,
-      "q_curation_incr" -> admMemoLanes)
-    val selectedNames = selected.map(_._1).toSet
-    val unownedWarm = memoOwners.collect {
-      case (owner, lanes) if !selectedNames.contains(owner) =>
-        (lanes - owner).filter(selectedNames.contains)
-    }.flatten.toSeq.distinct.sorted
+    val unownedWarm = stateOwners.filterNot(o => selectedNames(o.lane))
+      .flatMap(_.consumers.filter(selectedNames)).distinct.sorted
     unownedWarm.foreach(l => System.err.println(
       s"[bench] note: $l measured against a warm shared memo whose owner " +
         "lane is not selected — time excludes the shared build"))
     // every timed run of an OWNER lane — first pass AND retry pass — must
-    // rebuild its shared memo, or a warm-memo run records a near-zero time
-    def resetOwnedMemos(name: String): Unit = {
-      if (name == "q_curation")
-        graft.operators.CurationPipeline.resetKernelMemo(spark)
-      if (name == "q_triangle_count")
-        SparkEntry.resetCoPurchaseEdges(spark)
-      if (name == "q_bpe_merges")
-        graft.operators.BpeTrainer.resetSharedMemo(spark)
-      if (name == "q_cov_matrix")
-        SparkEntry.resetEmbeddingCov(spark)
-      if (name == "q_vec_clusters")
-        graft.operators.IvfIndex.resetCoarseMemo(spark)
-      if (name == "q_cf_similarity")
-        graft.operators.Graph.resetCoStateMemo(spark)
-      if (name == "q_table_profile")
-        graft.operators.Profile.resetProfileMemo(spark)
-      if (name == "q_dedup_editdist")
-        graft.operators.NearDup.resetEditDistanceMemo(spark)
-      if (name == "q_vec_pq")
-        graft.operators.PqIndex.resetPqMemo(spark, "raw")
-      if (name == "q_vec_rpq")
-        graft.operators.PqIndex.resetPqMemo(spark, "residual")
-      if (name == "q_curation_incr")
-        graft.operators.CurationPipeline.resetAdmissionMemo(spark)
+    // rebuild its shared state, or a warm run records a near-zero time
+    def resetOwnedMemos(name: String): Unit =
+      stateOwners.filter(_.lane == name).flatMap(_.states)
+        .foreach(graft.core.SharedState.reset(spark, _))
+    // checkpoint/cache blocks from one query must not tax the next:
+    // localCheckpoint pins storage blocks until the RDD is GC'd, and 90+
+    // queries x 2 iters of pinned blocks shrink execution memory for every
+    // later query (measured as a slow creep on the small queries). Every
+    // SharedState frame is exempt: its lineage is truncated, so dropping
+    // its blocks is fatal — and sharing it across lanes is the point.
+    // Unpersisting the backing RDDs does NOT deregister df.persist() plans
+    // from the session CacheManager, so a later query whose subplan
+    // canonically matches a previous query's persisted frame silently
+    // reuses (or re-materializes into) its InMemoryRelation — measured as
+    // q_vec_rpq "running" in 0.02 s when q_sim_topk_ivfrpq preceded it
+    // (both persist the same forCompute(embeddings) plan). clearCache()
+    // deregisters them all; shared frames survive (localCheckpoint is
+    // RDD-level state, not a CacheManager entry).
+    def dropQueryBlocks(): Unit = {
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values
+        .filter(_.name != graft.core.SharedState.PinnedRddName)
+        .foreach(_.unpersist(blocking = false))
     }
     // Spill accounting (opt-in: SPARK_GRAFT_BENCH_SPILL=1): a task-end
     // listener sums memory/disk bytes spilled; read per query. This is the
@@ -288,26 +204,7 @@ object Bench {
           System.err.println(s"[bench] $name iter $it failed: ${e.getMessage}")
         }
         val dt = (System.nanoTime() - t0) / 1e9
-        // checkpoint/cache blocks from one query must not tax the next:
-        // localCheckpoint pins storage blocks until the RDD is GC'd, and 90+
-        // queries x 2 iters of pinned blocks shrink execution memory for
-        // every later query (measured as a slow creep on the small queries).
-        // Memoized cross-query frames (the curation kernel) are exempt:
-        // their lineage is truncated, so dropping their blocks is fatal —
-        // and sharing them across capstones is the point.
-        // Round-10 attribution fix: unpersisting the backing RDDs does NOT
-        // deregister df.persist() plans from the session CacheManager, so a
-        // later query whose subplan canonically matches a previous query's
-        // persisted frame silently reuses (or re-materializes into) its
-        // InMemoryRelation — measured as q_vec_rpq "running" in 0.02 s when
-        // q_sim_topk_ivfrpq preceded it (both persist the same
-        // forCompute(embeddings) plan). clearCache() deregisters them all;
-        // the curation kernel survives (localCheckpoint is RDD-level state,
-        // not a CacheManager entry).
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .filter(_.name != graft.operators.CurationPipeline.PinnedRddName)
-          .foreach(_.unpersist(blocking = false))
+        dropQueryBlocks()
         dt
       }
       System.err.println(
@@ -369,10 +266,7 @@ object Bench {
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name retry failed: ${e.getMessage}") }
           val dt = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .filter(_.name != graft.operators.CurationPipeline.PinnedRddName)
-            .foreach(_.unpersist(blocking = false))
+          dropQueryBlocks()
           retryWall += dt
           best = math.min(best, dt)
           tries += 1
@@ -412,7 +306,7 @@ object Bench {
     // owner lanes pay their shared memo's build inside their timed
     // iterations (reset + rebuild); tag them so per-lane readers can
     // separate attribution from regression mechanically (round-13 verdict)
-    val ownersJson = memoOwners.keys.toSeq.sorted
+    val ownersJson = stateOwners.map(_.lane).sorted
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     val perQuery =
       s"""{"metric":"per_query","queries":$qs,"owners":$ownersJson,"sf":"$sfDir"}"""
@@ -482,5 +376,63 @@ object Bench {
     spark.stop()
     // a failed query must not masquerade as a clean bench run
     if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** One row per owner lane of [[graft.core.SharedState]] entries: the
+    * owner pays the build of `states` inside its timed iterations (the
+    * bench resets them before each), `consumers` read the warm states and
+    * measure marginal work, and `warm` builds the states untimed at suite
+    * start. Every state name in `src/main` has exactly one row. */
+  private[graft] final case class StateOwner(lane: String,
+      states: Seq[String], consumers: Set[String],
+      warm: (SparkSession, String) => Unit) {
+    def lanes: Set[String] = consumers + lane
+  }
+
+  private[graft] val stateOwners: Seq[StateOwner] = {
+    import graft.operators._
+    import graft.sources.Tables
+    Seq(
+      // `clean` is built by the manifest lanes over the kernel; resetting it
+      // with the kernel keeps every curation entry under one owner
+      StateOwner("q_curation", Seq("curation.kept", "curation.clean"),
+        Set("q_curation_v2", "q_curation_v3", "q_curation_v4",
+          "q_curation_v5", "q_curation_v6"),
+        (s, d) => CurationPipeline.keptDocuments(s, d): Unit),
+      StateOwner("q_triangle_count", Seq("graph.edges"),
+        Set("q_label_prop", "q_kcore"),
+        (s, d) => SparkEntry.coPurchaseEdges(s, d): Unit),
+      StateOwner("q_bpe_merges", Seq("bpe.train"), Set("q_bpe_apply"),
+        (s, d) => BpeTrainer.mergesShared(Tables.documents(s, d), key = d): Unit),
+      StateOwner("q_cov_matrix", Seq("vector.cov"), Set("q_pca_project"),
+        (s, d) => SparkEntry.embeddingCov(s, d): Unit),
+      // the eight lanes training the identical (8,1) quantizer on the same
+      // corpus (q_vec_assign_new trains its own on a history SUBSET)
+      StateOwner("q_vec_clusters", Seq("ivf.coarse"),
+        Set("q_sim_topk_ivf", "q_sim_topk_ivfpq", "q_sim_topk_ivfrpq",
+          "q_vec_rpq", "q_ivf_recall_report", "q_hard_negatives_ivf",
+          "q_dedup_semantic"),
+        (s, d) => IvfIndex.warmCoarse(Tables.embeddings(s, d), key = d)),
+      StateOwner("q_curation_incr", Seq("curation.admission"),
+        Set("q_admission_report"),
+        (s, d) => CurationPipeline.incrementalAdmission(s, d): Unit),
+      StateOwner("q_vec_pq", Seq("pq.raw"),
+        Set("q_vec_adc", "q_sim_topk_ivfpq"),
+        (s, d) => PqIndex.warmCodebooks(Tables.embeddings(s, d), key = d,
+          warmResidual = false)),
+      StateOwner("q_vec_rpq", Seq("pq.residual"), Set("q_sim_topk_ivfrpq"),
+        (s, d) => PqIndex.warmCodebooks(Tables.embeddings(s, d), key = d,
+          warmRaw = false)),
+      StateOwner("q_cf_similarity", Seq("cf.co_state"), Set("q_cf_recommend"),
+        (s, d) => Graph.warmCoState(SparkEntry.cfBaskets(s, d), key = d,
+          basketCol = "cust", itemCol = "supp")),
+      StateOwner("q_table_profile", Seq("profile.exact"),
+        Set("q_table_profile_approx"),
+        (s, d) => Profile.warmProfile(Tables.lineitem(s, d),
+          key = s"$d#lineitem")),
+      StateOwner("q_dedup_editdist", Seq("neardup.edit_pairs"),
+        Set("q_dedup_editdist_survivors"),
+        (s, d) => NearDup.warmEditDistancePairs(Tables.documents(s, d),
+          key = d)))
   }
 }

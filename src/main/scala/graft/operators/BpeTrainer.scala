@@ -88,49 +88,32 @@ object BpeTrainer {
     finally if (checkpointDir.isDefined) sc.setCheckpointDir(prevDir.orNull)
   }
 
-  // ---- shared train state (the CurationPipeline.memoFrame discipline) ----
+  // ---- shared train state (SharedState "bpe.train") ----
   // `merges` and `tokenized` both run the SAME sequential loop; a process
   // that serves both (the bench suite, a pipeline materializing the merge
   // table next to the tokenized corpus) would pay the k corpus scans twice
-  // for identical state. Memoize the loop output per (session, key, steps):
-  // the final seqs frame is localCheckpointed by the loop already and gets
-  // the pinned RDD name so the bench's between-query cleanup keeps its
-  // blocks (truncated lineage — dropping them is unrecoverable). At real
+  // for identical state. Share the loop output per (key, steps). At real
   // scale this is "tokenizer state written once, read by both consumers".
-  // keyed on the column names too (round-12 ADVICE fix): `mergesShared`/
-  // `tokenizedShared` accept text/id column parameters, so a second caller
-  // with the same key but different columns must NOT be served state
-  // trained on the wrong columns.
-  // ... and on the docs frame's plan fingerprint (round-13): the column
-  // names identify WHICH columns, the fingerprint identifies WHICH corpus —
-  // a reused key over a different input relation misses and retrains.
-  private val trainMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, Int, String, String, Int),
-    (Seq[(Long, String, String, Long)], DataFrame)]()
-
+  // keyed on the column names too: `mergesShared`/`tokenizedShared` accept
+  // text/id column parameters, so a second caller with the same key but
+  // different columns must NOT be served state trained on the wrong
+  // columns.
+  // ... and on the docs frame's plan fingerprint: the column names
+  // identify WHICH columns, the fingerprint identifies WHICH corpus — a
+  // reused key over a different input relation misses and retrains.
   private def trainedState(docs: DataFrame, key: String, steps: Int,
-      text: String, id: String): (Seq[(Long, String, String, Long)], DataFrame) = {
-    val k = (docs.sparkSession, key, steps, text, id,
-      graft.core.MemoPin.planFingerprint(docs))
-    val hit = trainMemo.get(k)
-    if (hit != null) hit
-    else {
-      val built = mergesLoop(docs, steps, text, id, reliable = false)
-      // MATERIALIZE before pinning: the final frame's localCheckpoint is
-      // lazy and its computation reads the loop's intermediate checkpoints,
-      // whose blocks a between-query cleanup may drop (they are not
-      // pinned — only the final state is). Forcing here truncates the
-      // final lineage while the intermediates still exist, so the memo
-      // value is recoverable for the rest of the session.
-      built._2.count()
-      graft.core.MemoPin.pin(built._2)
-      val prev = trainMemo.putIfAbsent(k, built)
-      if (prev == null) built
-      else { graft.core.MemoPin.unpin(built._2); prev }
+      text: String, id: String): (Seq[(Long, String, String, Long)], DataFrame) =
+    graft.core.SharedState.getOrBuild(docs.sparkSession, "bpe.train",
+        (key, steps, text, id, graft.core.SharedState.planFingerprint(docs))) {
+      val (learned, seqs) = mergesLoop(docs, steps, text, id, reliable = false)
+      // the loop's final frame is already a (lazy) local checkpoint: forcing
+      // it here is the eager checkpoint, taken while the loop's earlier,
+      // unpinned checkpoints still exist
+      seqs.count()
+      (learned, seqs)
     }
-  }
 
-  /** [[merges]] reading the memoized shared train state (see above). */
+  /** [[merges]] reading the shared train state (see above). */
   def mergesShared(docs: DataFrame, key: String, steps: Int = 4,
                    text: String = "text", id: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
@@ -140,7 +123,7 @@ object BpeTrainer {
       .orderBy("step")
   }
 
-  /** [[tokenized]] reading the memoized shared train state (see above). */
+  /** [[tokenized]] reading the shared train state (see above). */
   def tokenizedShared(docs: DataFrame, key: String, steps: Int = 4,
                       text: String = "text", id: String = "doc_id"): DataFrame = {
     val finalSeqs = trainedState(docs, key, steps, text, id)._2
@@ -151,23 +134,6 @@ object BpeTrainer {
         size(regexp_extract_all(col("seq"), lit("\\(([^()]*)\\)"), lit(1)))
           .cast("long").as("n_tokens_bpe")), id)
       .orderBy(id)
-  }
-
-  /** Build the shared state so later lanes hit a warm memo (bench warms
-    * this untimed at suite start; trainedState materializes eagerly). */
-  def warmShared(docs: DataFrame, key: String, steps: Int = 4): Unit =
-    trainedState(docs, key, steps, "text", "doc_id"): Unit
-
-  /** Drop this session's memoized train state — the bench calls it before
-    * each timed `q_bpe_merges` iteration so the TRAINER lane owns the loop
-    * cost on every iteration and `q_bpe_apply` measures its marginal work
-    * over a warm memo. */
-  def resetSharedMemo(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val it = trainMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == spark) { graft.core.MemoPin.unpin(e.getValue._2); it.remove() }
-    }
   }
 
   private def mergesLoop(docs: DataFrame, steps: Int, text: String, id: String,

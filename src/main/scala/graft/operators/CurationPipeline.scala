@@ -15,10 +15,11 @@ import graft.sources.Tables
   *   4. near-dup removal: MinHash/LSH pairs above Jaccard 0.5; the larger
   *      doc_id of each pair is dropped (NearDup)
   *
-  * Everything stays lazy until the sink: Catalyst fuses the quality/language
-  * gates into the scan, and only gate-surviving documents reach the
-  * (shuffling) dedup stages — filter early, shuffle late, the core curation
-  * discipline at 100 TB. */
+  * The kernel is one plan up to its shared checkpoint, which
+  * [[keptDocuments]] takes when it is called: Catalyst fuses the
+  * quality/language gates into the scan, and only gate-surviving documents
+  * reach the (shuffling) dedup stages — filter early, shuffle late, the
+  * core curation discipline at 100 TB. */
 object CurationPipeline {
 
   val MinLen = 100L
@@ -27,86 +28,21 @@ object CurationPipeline {
 
   // The kernel (and the v3/v4-shared `clean` frame below) is re-derived by
   // every capstone that composes on top of it — v1..v5 in one bench process
-  // would run it five times for an identical result. Memoize the lazily-
-  // checkpointed frame per (session, dir, phrases): each capstone's ORACLE
+  // would run it five times for an identical result. Share the frame per
+  // (dir, phrases) as SharedState "curation.kept": each capstone's ORACLE
   // row is unchanged (same deterministic rows), but the process pays the
-  // kernel once. Keyed on the session so test suites with their own
-  // sessions never see a frame from a stopped one. At real scale this is
-  // the "kernel output persisted to storage between stages" discipline.
-  /** RDD name marking a memoized frame's checkpoint blocks: the bench
-    * harness unpersists all persistent RDDs between queries (pinned blocks
-    * tax later queries) but must NOT drop these — a localCheckpoint has a
-    * truncated lineage, so losing its blocks is unrecoverable. */
-  val PinnedRddName = graft.core.MemoPin.PinnedRddName
+  // kernel once. At real scale this is the "kernel output persisted to
+  // storage between stages" discipline.
 
-  private val frameMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Seq[String], String), DataFrame]()
-  // NOT computeIfAbsent: capstone memo entries NEST (trainingManifest's
-  // build calls keptDocuments, itself memoized), and ConcurrentHashMap
-  // forbids recursive updates from inside a compute ("Recursive update",
-  // order-dependent — it only fires when the outer capstone runs before
-  // the kernel is cached). get/putIfAbsent tolerates the nesting; a
-  // concurrent duplicate build is benign (the frame is deterministic) and
-  // the loser's checkpoint blocks are dropped so they can't stay pinned.
-  private def memoFrame(spark: SparkSession, dir: String,
-                        phrases: Seq[String], tag: String)
-                       (build: => DataFrame): DataFrame = {
-    val key = (spark, dir, phrases, tag)
-    val hit = frameMemo.get(key)
-    if (hit != null) hit
-    else {
-      val ck = build.localCheckpoint(false)
-      ck.queryExecution.analyzed.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.setName(PinnedRddName)
-        case _ => ()
-      }
-      val prev = frameMemo.putIfAbsent(key, ck)
-      if (prev == null) ck
-      else {
-        ck.queryExecution.analyzed.foreach {
-          case l: org.apache.spark.sql.execution.LogicalRDD =>
-            l.rdd.unpersist(false)
-          case _ => ()
-        }
-        prev
-      }
-    }
-  }
-
-  /** Bench-attribution hooks (round-9): the memo makes the KERNEL's cost
-    * land on whichever curation lane happens to run first (alphabetical
-    * accident — q_admission_report paid it while q_curation reported a
-    * sub-0.1 s memo hit). The bench warms the kernel once UNTIMED at suite
-    * start ([[warmKernel]]), then [[resetKernelMemo]] before each timed
-    * q_curation iteration, so q_curation owns the kernel build on every
-    * iteration (iter spread ~1) and every other lane measures its marginal
-    * work over a warm kernel. Only the "kept" entries reset — "clean" is a
-    * separately-checkpointed frame (truncated lineage, no dependency on the
-    * kept blocks) owned by the manifest lanes. */
-  def resetKernelMemo(spark: SparkSession): Unit = {
-    val it = frameMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == spark && e.getKey._4 == "kept") {
-        e.getValue.queryExecution.analyzed.foreach {
-          case l: org.apache.spark.sql.execution.LogicalRDD =>
-            l.rdd.unpersist(false)
-          case _ => ()
-        }
-        it.remove()
-      }
-    }
-  }
-
-  /** Build + MATERIALIZE the kernel (localCheckpoint(false) is lazy — the
-    * blocks land on the first action), so later lanes hit a warm memo. */
-  def warmKernel(spark: SparkSession, dir: String): Unit =
-    keptDocuments(spark, dir).count(): Unit
+  /** Drop this session's curation kernel. The bench calls it before each
+    * timed q_curation iteration, so q_curation owns the kernel build and
+    * every other lane measures its marginal work over a warm kernel. */
+  def resetKernelMemo(spark: SparkSession): Unit =
+    graft.core.SharedState.reset(spark, "curation.kept")
 
   def keptDocuments(spark: SparkSession, dir: String,
                     blockPhrases: Seq[String] = Nil): DataFrame =
-    memoFrame(spark, dir, blockPhrases, "kept") {
+    graft.core.SharedState.frame(spark, "curation.kept", (dir, blockPhrases)) {
       keptDocumentsUncached(spark, dir, blockPhrases)
     }
 
@@ -227,8 +163,9 @@ object CurationPipeline {
     val docs = Tables.documents(spark, dir)
     // the containment+decontamination survivor frame is identical for every
     // capstone sharing `blockPhrases` (v3/v4 differ only downstream, at the
-    // scrub stage) — memoized like the kernel
-    val clean = memoFrame(spark, dir, blockPhrases, "clean") {
+    // scrub stage) — shared like the kernel
+    val clean = graft.core.SharedState.frame(spark, "curation.clean",
+        (dir, blockPhrases)) {
       // kernel consumed by two chains (containment pairs + anti-join left
       // side): materialize once, lazily
       val keptDocs = keptDocuments(spark, dir, blockPhrases)
@@ -243,7 +180,7 @@ object CurationPipeline {
       val decon = TextAnalysis.decontaminate(afterCont)
       afterCont
         .join(decon.filter(!col("contaminated")).select("doc_id"), "doc_id")
-      // memoFrame checkpoints the result (consumed by chunking + the
+      // SharedState checkpoints the result (consumed by chunking + the
       // split assignment + every sibling capstone)
     }
 
@@ -314,34 +251,13 @@ object CurationPipeline {
   def incrementalAdmission(spark: SparkSession, dir: String,
                            blockPhrases: Seq[String] = Seq("slow join"),
                            threshold: Double = 0.5): DataFrame =
-    memoFrame(spark, dir, blockPhrases, s"admission:$threshold") {
+    graft.core.SharedState.frame(spark, "curation.admission",
+        (dir, blockPhrases, threshold)) {
       val docs = Tables.documents(spark, dir)
       admitBatch(docs.filter(pmod(col("doc_id"), lit(5)) === 0),
         docs.filter(pmod(col("doc_id"), lit(5)) =!= 0),
         blockPhrases, threshold)
     }
-
-  /** Bench hook: materialize the admission funnel untimed (owner
-    * q_curation_incr rebuilds it per timed iteration). */
-  def warmAdmission(spark: SparkSession, dir: String): Unit =
-    incrementalAdmission(spark, dir).count(): Unit
-
-  /** Drop this session's admission-funnel memo entries and their pinned
-    * blocks. */
-  def resetAdmissionMemo(spark: SparkSession): Unit = {
-    val it = frameMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == spark && e.getKey._4.startsWith("admission:")) {
-        e.getValue.queryExecution.analyzed.foreach {
-          case l: org.apache.spark.sql.execution.LogicalRDD =>
-            l.rdd.unpersist(false)
-          case _ => ()
-        }
-        it.remove()
-      }
-    }
-  }
 
   /** The funnel over explicit batch/history frames (each needs doc_id +
     * text; the fixture split above is just one instantiation). */

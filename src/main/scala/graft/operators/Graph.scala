@@ -282,27 +282,20 @@ object Graph {
       .groupBy("item_a", "item_b").agg(count(lit(1)).as("co_cnt"))
       .filter(col("co_cnt") >= minCo)
 
-  // ---- shared CF co-occurrence state (the BpeTrainer.trainMemo
-  // discipline) ----
+  // ---- shared CF co-occurrence state (SharedState "cf.co_state") ----
   // q_cf_similarity and q_cf_recommend build the IDENTICAL model from the
   // same basket relation: the per-item count table and the min-support
   // co-occurrence pair table — the expensive half of both lanes (basket
-  // groupBy + pair expansion + pair count). Memoize the two frames per
-  // (session, corpus key, minCo): item-pair grain, localCheckpointed
-  // eagerly and MemoPin-pinned so the bench's between-query cleanup keeps
-  // the blocks. recommendationEval deliberately builds its own — its model
-  // trains on the holdout-split TRAIN relation, not this corpus. At real
-  // scale this is "the co-occurrence model is materialized once, every
-  // serving/ranking surface reads it".
-  // The key folds in the SELECTED input's plan fingerprint (round-12
-  // ADVICE): a caller reusing a corpus key with a different baskets frame
-  // — or the same frame but different basket/item columns — misses and
-  // rebuilds instead of being served the wrong model.
-  private val coMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, Int, Int),
-    (DataFrame, DataFrame)]()
-
-  /** (itemCnt, co) through the shared memo; None builds fresh (and leaves
+  // groupBy + pair expansion + pair count). Share the two frames per
+  // (corpus key, minCo). recommendationEval deliberately builds its own —
+  // its model trains on the holdout-split TRAIN relation, not this corpus.
+  // At real scale this is "the co-occurrence model is materialized once,
+  // every serving/ranking surface reads it".
+  // The key folds in the SELECTED input's plan fingerprint: a caller
+  // reusing a corpus key with a different baskets frame — or the same
+  // frame but different basket/item columns — misses and rebuilds instead
+  // of being served the wrong model.
+  /** (itemCnt, co) through the shared state; None builds fresh (and leaves
     * the caller's persist/caching choices untouched). */
   private def coState(baskets: DataFrame, basketCol: String, itemCol: String,
       minCo: Int, memoKey: Option[String],
@@ -327,21 +320,19 @@ object Graph {
       case Some(key) =>
         // fingerprint the selected two-column view: captures both the
         // input relation and the basket/item column choice
-        val fp = graft.core.MemoPin.planFingerprint(
+        val fp = graft.core.SharedState.planFingerprint(
           baskets.select(col(basketCol).as("basket"), col(itemCol).as("item")))
-        coMemo.computeIfAbsent((baskets.sparkSession, key, minCo, fp), _ => {
+        graft.core.SharedState.getOrBuild(baskets.sparkSession, "cf.co_state",
+            (key, minCo, fp)) {
           val b = distinctB()
-          // eager localCheckpoints: materialize while b's blocks exist,
-          // then release b — the memo holds only the model-grain frames
-          val itemCnt = b.groupBy("item").agg(count(lit(1)).as("cnt"))
-            .localCheckpoint(true)
-          val co = coEdgesOfDistinct(b, minCo)
-            .localCheckpoint(true)
-          graft.core.MemoPin.pin(itemCnt)
-          graft.core.MemoPin.pin(co)
+          // eager checkpoints: materialize while b's blocks exist, then
+          // release b — the state holds only the model-grain frames
+          val itemCnt = graft.core.SharedState.checkpoint(
+            b.groupBy("item").agg(count(lit(1)).as("cnt")))
+          val co = graft.core.SharedState.checkpoint(coEdgesOfDistinct(b, minCo))
           b.unpersist(false)
           (itemCnt, co)
-        })
+        }
     }
   }
 
@@ -350,19 +341,6 @@ object Graph {
   def warmCoState(baskets: DataFrame, key: String, basketCol: String,
                   itemCol: String, minCo: Int = 2): Unit =
     coState(baskets, basketCol, itemCol, minCo, Some(key)): Unit
-
-  /** Drop this session's CF memo entries and their pinned blocks. */
-  def resetCoStateMemo(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val it = coMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) {
-        graft.core.MemoPin.unpin(e.getValue._1)
-        graft.core.MemoPin.unpin(e.getValue._2)
-        it.remove()
-      }
-    }
-  }
 
   def itemSimilarity(baskets: DataFrame, basketCol: String, itemCol: String,
                      minCo: Int = 2, topN: Int = 100,

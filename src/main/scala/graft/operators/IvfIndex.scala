@@ -183,62 +183,50 @@ object IvfIndex {
     cents
   }
 
-  // ---- shared trained coarse quantizer (the BpeTrainer.trainMemo
-  // discipline, minus the pinning) ----
+  // ---- shared trained coarse quantizer (SharedState "ivf.coarse") ----
   // Eight lanes in the suite train the SAME (nLists=8, nIters=1) coarse
   // quantizer on the SAME embeddings table — IVF/IVF-PQ/IVF-RPQ top-k,
   // cluster histogram, recall report, hard-negative mining, semantic
   // dedup, residual PQ codes. (q_vec_assign_new trains a ninth quantizer
-  // but on its HISTORY SUBSET — deliberately outside this memo, see
+  // but on its HISTORY SUBSET — deliberately outside this state, see
   // [[assignNewBatch]].) Decimal-exact centroid sums make the result
   // bit-identical across call paths and partitionings, so one trained
-  // quantizer serves all consumers. Unlike the BPE/edge/covariance memos
-  // the value is MODEL-SIZED DRIVER STATE (nLists x dims literal columns,
-  // a few KB) — no checkpoint blocks to pin, nothing for the bench's
-  // between-query cleanup to drop. At real scale this is "train the index
-  // once, persist the centroid matrix next to it, every reader loads it".
+  // quantizer serves all consumers. The value is MODEL-SIZED DRIVER STATE
+  // (nLists x dims literal columns, a few KB) — no blocks to pin. At real
+  // scale this is "train the index once, persist the centroid matrix next
+  // to it, every reader loads it".
   // Callers opt in with a memoKey naming the input corpus (the bench/
   // Verify pass the sf dir); the default None trains fresh. The key
   // deliberately has NO column-name component: every entry point reads
-  // the fixed (vec_id, embedding) schema (the BpeTrainer memo-key lesson
-  // — a key narrower than the call's free parameters serves wrong state).
-  // ... plus the training frame's plan fingerprint (round-13): a reused
-  // corpus key over a different embeddings relation misses and retrains
-  // instead of serving a quantizer trained on someone else's vectors.
-  // Every call site passes forCompute(emb), so owner and consumers
-  // fingerprint the same plan shape.
-  private val coarseMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, Int, Int, Int),
-    (Column, Column)]()
-
-  /** [[lloyd]] through the shared-quantizer memo (see above): a memoKey
-    * names the training corpus; None bypasses the memo entirely. */
+  // the fixed (vec_id, embedding) schema (the BpeTrainer key lesson — a
+  // key narrower than the call's free parameters serves wrong state).
+  // ... plus the training frame's plan fingerprint: a reused corpus key
+  // over a different embeddings relation misses and retrains instead of
+  // serving a quantizer trained on someone else's vectors. Every call site
+  // passes forCompute(emb), so owner and consumers fingerprint the same
+  // plan shape.
+  /** [[lloyd]] through the shared-quantizer state (see above): a memoKey
+    * names the training corpus; None bypasses it entirely. */
   private def coarse(emb: DataFrame, nLists: Int, nIters: Int,
                      memoKey: Option[String]): (Column, Column) =
     memoKey match {
       case None => lloyd(emb, nLists, nIters)
       case Some(key) =>
-        coarseMemo.computeIfAbsent(
-          (emb.sparkSession, key, nLists, nIters,
-            graft.core.MemoPin.planFingerprint(emb)),
-          _ => lloyd(emb, nLists, nIters))
+        graft.core.SharedState.getOrBuild(emb.sparkSession, "ivf.coarse",
+          (key, nLists, nIters, graft.core.SharedState.planFingerprint(emb)))(
+          lloyd(emb, nLists, nIters))
     }
 
-  /** Train the shared quantizer eagerly so later lanes hit a warm memo
+  /** Train the shared quantizer eagerly so later lanes hit a warm entry
     * (the bench warms this untimed at suite start). */
   def warmCoarse(emb: DataFrame, key: String, nLists: Int = 8,
                  nIters: Int = 1): Unit =
     coarse(graft.core.Parallelism.forCompute(emb), nLists, nIters,
       Some(key)): Unit
 
-  /** Drop this session's trained quantizers — the bench calls it before
-    * each timed iteration of the OWNER lane (q_vec_clusters) so the
-    * training cost lands there and every consumer measures marginal work.
-    * Pure driver state: nothing to unpersist. */
-  def resetCoarseMemo(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val it = coarseMemo.keySet().iterator()
-    while (it.hasNext) if (it.next()._1 eq spark) it.remove()
-  }
+  /** Drop this session's trained quantizers. */
+  def resetCoarseMemo(spark: org.apache.spark.sql.SparkSession): Unit =
+    graft.core.SharedState.reset(spark, "ivf.coarse")
 
   /** Final inverted-list assignment after seed + `nIters` Lloyd steps.
     * Vectors with a null or empty embedding are DROPPED, matching the

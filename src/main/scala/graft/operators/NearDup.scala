@@ -624,37 +624,23 @@ object NearDup {
     * [[graft.core.Parallelism.forCompute]] documents for scans, applied to
     * a join output. The accept rule — distance within `maxRatioPct`% of
     * the longer side — is exact integer arithmetic, engine-identical. */
-  // ---- shared verified edit-distance pairs (the BpeTrainer.trainMemo
-  // discipline) ----
+  // ---- shared verified edit-distance pairs (SharedState
+  // "neardup.edit_pairs") ----
   // q_dedup_editdist emits the verified pair table; q_dedup_editdist_
   // survivors rebuilds the IDENTICAL table just to feed connected
   // components — at sf1 that is ~10 s of blocking + Levenshtein DP
-  // recomputed verbatim. Memoize the pair-grain result per (session,
-  // corpus key, hammingMax, maxRatioPct): eager localCheckpoint, pinned
-  // blocks, q_dedup_editdist owns the build in the bench. At real scale:
-  // "the linkage job publishes its evidence table; clustering reads it".
-  // The key folds in the docs frame's plan fingerprint (round-12 ADVICE):
-  // a reused corpus key over a DIFFERENT input relation misses and
-  // rebuilds instead of serving someone else's pair table.
-  private val edMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, Int, Int, Int), DataFrame]()
+  // recomputed verbatim. Share the pair-grain result per (corpus key,
+  // hammingMax, maxRatioPct); q_dedup_editdist owns the build in the
+  // bench. At real scale: "the linkage job publishes its evidence table;
+  // clustering reads it".
+  // The key folds in the docs frame's plan fingerprint: a reused corpus
+  // key over a DIFFERENT input relation misses and rebuilds instead of
+  // serving someone else's pair table.
 
   /** Build the shared pair table eagerly (bench warms this untimed). */
   def warmEditDistancePairs(docs: DataFrame, key: String,
       hammingMax: Int = 8, maxRatioPct: Int = 30): Unit =
     editDistancePairs(docs, hammingMax, maxRatioPct, Some(key)): Unit
-
-  /** Drop this session's pair-table memo entries and their pinned blocks. */
-  def resetEditDistanceMemo(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val it = edMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) {
-        graft.core.MemoPin.unpin(e.getValue)
-        it.remove()
-      }
-    }
-  }
 
   def editDistancePairs(docs: DataFrame, hammingMax: Int = 8,
                         maxRatioPct: Int = 30,
@@ -662,14 +648,10 @@ object NearDup {
     memoKey match {
       case None => buildEditDistancePairs(docs, hammingMax, maxRatioPct)
       case Some(key) =>
-        edMemo.computeIfAbsent(
-          (docs.sparkSession, key, hammingMax, maxRatioPct,
-            graft.core.MemoPin.planFingerprint(docs)), _ => {
-            val p = buildEditDistancePairs(docs, hammingMax, maxRatioPct)
-              .localCheckpoint(true)
-            graft.core.MemoPin.pin(p)
-            p
-          })
+        graft.core.SharedState.frame(docs.sparkSession, "neardup.edit_pairs",
+          (key, hammingMax, maxRatioPct,
+            graft.core.SharedState.planFingerprint(docs)))(
+          buildEditDistancePairs(docs, hammingMax, maxRatioPct))
     }
 
   private def buildEditDistancePairs(docs: DataFrame, hammingMax: Int,

@@ -65,8 +65,7 @@ object PqIndex {
     packed
   }
 
-  // ---- shared trained PQ codebooks (round-13; the IvfIndex.coarseMemo
-  // discipline) ----
+  // ---- shared trained PQ codebooks (SharedState "pq.raw"/"pq.residual") ----
   // Three lanes train the IDENTICAL raw-vector codebook on the same
   // embeddings table (q_vec_pq storage codes, q_vec_adc search,
   // q_sim_topk_ivfpq search), and two more train the IDENTICAL residual
@@ -79,28 +78,27 @@ object PqIndex {
   // deployment shape: the codebook is trained once per index build and
   // persisted next to the codes; search nodes load it — a query path that
   // retrains the codebook would return different codes than storage.
-  // Key: (session, basis, corpus key, nIters, training-frame fingerprint).
-  // `basis` ("raw" | "residual") exists so each OWNER lane resets only its
-  // own codebook; the plan fingerprint (round-13 memo contract) makes a
-  // reused corpus key over a different embeddings relation miss and
-  // retrain. Residual callers fingerprint their RESIDUAL frame, whose plan
-  // embeds the coarse centroid literals — bit-identical training makes
-  // owner and consumer fingerprints equal, while a different coarse basis
-  // (different nLists/corpus) misses by construction.
-  private val pqMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String, Int, Int),
-    Seq[(Column, Column)]]()
-
-  /** [[train]] through the shared-codebook memo; None trains fresh. */
-  private def trainShared(frame: DataFrame, nIters: Int, basis: String,
+  // One state name per basis, so each OWNER lane resets only its own
+  // codebook. Key: (corpus key, nIters,
+  // training-frame fingerprint); the fingerprint makes a reused corpus key
+  // over a different embeddings relation miss and retrain. Residual callers
+  // fingerprint their RESIDUAL frame, whose plan embeds the coarse centroid
+  // literals — bit-identical training makes owner and consumer
+  // fingerprints equal, while a different coarse basis (different
+  // nLists/corpus) misses by construction.
+  private def trainShared(frame: DataFrame, nIters: Int, residual: Boolean,
                           memoKey: Option[String]): Seq[(Column, Column)] =
     memoKey match {
       case None => train(frame, nIters)
       case Some(key) =>
-        pqMemo.computeIfAbsent(
-          (frame.sparkSession, basis, key, nIters,
-            graft.core.MemoPin.planFingerprint(frame)),
-          _ => train(frame, nIters))
+        val k = (key, nIters, graft.core.SharedState.planFingerprint(frame))
+        val spark = frame.sparkSession
+        if (residual)
+          graft.core.SharedState.getOrBuild(spark, "pq.residual", k)(
+            train(frame, nIters))
+        else
+          graft.core.SharedState.getOrBuild(spark, "pq.raw", k)(
+            train(frame, nIters))
     }
 
   /** The residual frame every residual-PQ entry point quantizes:
@@ -126,22 +124,11 @@ object PqIndex {
                     warmResidual: Boolean = true): Unit = {
     val e = graft.core.Parallelism.forCompute(emb)
     if (warmRaw)
-      trainShared(e, nIters, "raw", Some(key)): Unit
+      trainShared(e, nIters, residual = false, Some(key)): Unit
     if (warmResidual) {
       val coarse = IvfIndex.trainCoarse(e, nLists, nIters, Some(key))
-      trainShared(residualFrame(e, coarse), nIters, "residual", Some(key)): Unit
-    }
-  }
-
-  /** Drop this session's trained codebooks for one basis — the bench calls
-    * it before each timed iteration of that basis's OWNER lane. Pure
-    * driver state: nothing to unpersist. */
-  def resetPqMemo(spark: org.apache.spark.sql.SparkSession,
-                  basis: String): Unit = {
-    val it = pqMemo.keySet().iterator()
-    while (it.hasNext) {
-      val k = it.next()
-      if ((k._1 eq spark) && k._2 == basis) it.remove()
+      trainShared(residualFrame(e, coarse), nIters, residual = true,
+        Some(key)): Unit
     }
   }
 
@@ -152,7 +139,7 @@ object PqIndex {
   def codes(emb: DataFrame, nIters: Int = 1,
             memoKey: Option[String] = None): DataFrame = {
     val e = graft.core.Parallelism.forCompute(emb)
-    val packed = trainShared(e, nIters, "raw", memoKey)
+    val packed = trainShared(e, nIters, residual = false, memoKey)
     val cs = codeExprs(packed).zipWithIndex
       .map { case (c, s) => c.cast("long").as(s"code_$s") }
     e.select(col("vec_id") +: cs: _*)
@@ -183,7 +170,7 @@ object PqIndex {
     val e = graft.core.Parallelism.forCompute(emb).persist()
     val coarse = IvfIndex.trainCoarse(e, nLists, nIters, coarseMemoKey)
     val rframe = residualFrame(e, coarse)
-    val packed = trainShared(rframe, nIters, "residual", coarseMemoKey)
+    val packed = trainShared(rframe, nIters, residual = true, coarseMemoKey)
     val cs = codeExprs(packed).zipWithIndex
       .map { case (c, s) => c.cast("long").as(s"code_$s") }
     rframe.select(col("vec_id") +: col("list") +: cs: _*)
@@ -207,7 +194,7 @@ object PqIndex {
   def adcTopK(emb: DataFrame, nQueries: Int = 8, k: Int = 5,
               nIters: Int = 1, memoKey: Option[String] = None): DataFrame = {
     val e = graft.core.Parallelism.forCompute(emb)
-    val packed = trainShared(e, nIters, "raw", memoKey)
+    val packed = trainShared(e, nIters, residual = false, memoKey)
     val cs = codeExprs(packed).zipWithIndex
       .map { case (c, s) => c.cast("long").as(s"code_$s") }
     val corpus = e.select(col("vec_id").as("n_id") +: cs: _*)
@@ -292,7 +279,7 @@ object PqIndex {
     val coarse @ (matrix, listIds) =
       IvfIndex.trainCoarse(e, nLists, nIters, coarseMemoKey)
     val rframe = residualFrame(e, coarse)
-    val packed = trainShared(rframe, nIters, "residual", coarseMemoKey)
+    val packed = trainShared(rframe, nIters, residual = true, coarseMemoKey)
     val cs = codeExprs(packed).zipWithIndex
       .map { case (c, s) => c.cast("long").as(s"code_$s") }
     val corpus = rframe.select(col("vec_id").as("n_id") +: col("list") +: cs: _*)
@@ -337,7 +324,7 @@ object PqIndex {
     val e = graft.core.Parallelism.forCompute(emb).persist()
     val coarse = IvfIndex.trainCoarse(e, nLists, nIters, coarseMemoKey)
     val probes = IvfIndex.probes(e, coarse, nQueries, nProbe).select("q_id", "list")
-    val packed = trainShared(e, nIters, "raw", coarseMemoKey)
+    val packed = trainShared(e, nIters, residual = false, coarseMemoKey)
     val cs = codeExprs(packed).zipWithIndex
       .map { case (c, s) => c.cast("long").as(s"code_$s") }
     val corpus = e.select(

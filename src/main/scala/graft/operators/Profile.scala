@@ -39,50 +39,31 @@ object Profile {
     case _                                             => "skip"
   }
 
-  // ---- shared exact profile (the BpeTrainer.trainMemo discipline) ----
+  // ---- shared exact profile (SharedState "profile.exact") ----
   // q_table_profile_approx carries the EXACT profile alongside its HLL
   // estimates as the oracle-checked ground truth — at sf1 that ground
   // truth is ~95% of the approx lane's cost, computed identically by
-  // q_table_profile moments earlier. Memoize the (report-grain, ~n_cols
-  // rows) exact profile per (session, corpus key, columns):
-  // localCheckpointed eagerly, MemoPin-pinned against the bench's
-  // between-query cleanup; q_table_profile owns the build. At real scale
-  // this is "the profile job publishes its table; the accuracy audit
-  // reads it".
-  // The key folds in the input frame's plan fingerprint (round-12
-  // ADVICE): a reused corpus key over a DIFFERENT relation misses and
-  // rebuilds instead of serving another table's profile.
-  private val profileMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, Seq[String], Int), DataFrame]()
+  // q_table_profile moments earlier. Share the (report-grain, ~n_cols
+  // rows) exact profile per (corpus key, columns); q_table_profile owns
+  // the build. At real scale this is "the profile job publishes its table;
+  // the accuracy audit reads it".
+  // The key folds in the input frame's plan fingerprint: a reused corpus
+  // key over a DIFFERENT relation misses and rebuilds instead of serving
+  // another table's profile.
 
   /** Build the shared exact profile eagerly (bench warms this untimed). */
   def warmProfile(df: DataFrame, key: String,
                   columns: Seq[String] = Nil): Unit =
     tableProfile(df, columns, Some(key)): Unit
 
-  /** Drop this session's profile memo entries and their pinned blocks. */
-  def resetProfileMemo(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val it = profileMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) {
-        graft.core.MemoPin.unpin(e.getValue)
-        it.remove()
-      }
-    }
-  }
-
   def tableProfile(df: DataFrame, columns: Seq[String] = Nil,
                    memoKey: Option[String] = None): DataFrame =
     memoKey match {
       case None => buildProfile(df, columns)
       case Some(key) =>
-        profileMemo.computeIfAbsent((df.sparkSession, key, columns,
-          graft.core.MemoPin.planFingerprint(df)), _ => {
-          val p = buildProfile(df, columns).localCheckpoint(true)
-          graft.core.MemoPin.pin(p)
-          p
-        })
+        graft.core.SharedState.frame(df.sparkSession, "profile.exact",
+          (key, columns, graft.core.SharedState.planFingerprint(df)))(
+          buildProfile(df, columns))
     }
 
   // per-slot routing: which typed grouping slot carries each column

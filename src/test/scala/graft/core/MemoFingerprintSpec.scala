@@ -15,10 +15,10 @@ class MemoFingerprintSpec extends SparkSpec {
     val a1 = graft.sources.Tables.lineitem(spark, sf)
     val a2 = graft.sources.Tables.lineitem(spark, sf)
     val b = graft.sources.Tables.orders(spark, sf)
-    assert(MemoPin.planFingerprint(a1) == MemoPin.planFingerprint(a2))
-    assert(MemoPin.planFingerprint(a1) != MemoPin.planFingerprint(b))
-    assert(MemoPin.planFingerprint(a1.select("l_orderkey"))
-      != MemoPin.planFingerprint(a1.select("l_partkey")))
+    assert(SharedState.planFingerprint(a1) == SharedState.planFingerprint(a2))
+    assert(SharedState.planFingerprint(a1) != SharedState.planFingerprint(b))
+    assert(SharedState.planFingerprint(a1.select("l_orderkey"))
+      != SharedState.planFingerprint(a1.select("l_partkey")))
   }
 
   test("profile memo: same corpus key over a DIFFERENT relation rebuilds " +
@@ -39,7 +39,7 @@ class MemoFingerprintSpec extends SparkSpec {
       val again = Profile.tableProfile(li, memoKey = Some(key)).collect()
       assert(again.map(_.toString).sorted.toSeq ==
         first.map(_.toString).sorted.toSeq)
-    } finally Profile.resetProfileMemo(spark)
+    } finally graft.core.SharedState.reset(spark, "profile.exact")
   }
 
   test("CF memo: same corpus key with different basket/item COLUMNS " +
@@ -63,6 +63,6 @@ class MemoFingerprintSpec extends SparkSpec {
       assert(byItem.contains((10L, 11L)) && byItem.contains((12L, 13L)))
       assert(byAlt.nonEmpty && byAlt.forall { case (a, b) => a >= 100L && b >= 100L },
         s"alt-column model leaked item-column pairs: $byAlt")
-    } finally Graph.resetCoStateMemo(spark)
+    } finally graft.core.SharedState.reset(spark, "cf.co_state")
   }
 }

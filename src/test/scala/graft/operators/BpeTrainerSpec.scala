@@ -21,16 +21,16 @@ class BpeTrainerSpec extends SparkSpec {
   test("shared train state: memoized forms identical to the direct forms, " +
     "second read is a memo hit, reset forces a rebuild") {
     val docs = graft.sources.Tables.documents(spark, sf)
-    BpeTrainer.resetSharedMemo(spark)
+    graft.core.SharedState.reset(spark, "bpe.train")
     val m1 = BpeTrainer.mergesShared(docs, key = sf).collect().toSeq
     assert(m1 == BpeTrainer.merges(docs).collect().toSeq)
     val t1 = BpeTrainer.tokenizedShared(docs, key = sf).collect().toSeq
     assert(t1 == BpeTrainer.tokenized(docs).collect().toSeq)
     // second read must come from the same memoized state (cheap, identical)
     assert(BpeTrainer.mergesShared(docs, key = sf).collect().toSeq == m1)
-    BpeTrainer.resetSharedMemo(spark)
+    graft.core.SharedState.reset(spark, "bpe.train")
     assert(BpeTrainer.tokenizedShared(docs, key = sf).collect().toSeq == t1)
-    BpeTrainer.resetSharedMemo(spark)
+    graft.core.SharedState.reset(spark, "bpe.train")
   }
 
   test("training stops emitting steps once no pairs remain") {

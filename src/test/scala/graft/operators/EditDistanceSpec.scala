@@ -58,7 +58,7 @@ class EditDistanceSpec extends SparkSpec {
 
   test("shared pair-table memo: warm == fresh for pairs and survivors, reset forgets") {
     val docs = graft.sources.Tables.documents(spark, sf)
-    NearDup.resetEditDistanceMemo(spark)
+    graft.core.SharedState.reset(spark, "neardup.edit_pairs")
     val fresh = NearDup.editDistancePairs(docs)
       .orderBy("a_id", "b_id").collect().toSeq
     val freshSurv = Dedup.clusterSurvivors(docs.select("doc_id"),
@@ -72,7 +72,7 @@ class EditDistanceSpec extends SparkSpec {
           .select("a_id", "b_id"))
       .orderBy("doc_id").collect().toSeq == freshSurv)
     assert(fresh.nonEmpty && freshSurv.nonEmpty)
-    NearDup.resetEditDistanceMemo(spark)
+    graft.core.SharedState.reset(spark, "neardup.edit_pairs")
   }
 
   test("pair exchange carries no document text (ids+fingerprints only)") {

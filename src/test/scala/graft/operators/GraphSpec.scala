@@ -7,7 +7,7 @@ class GraphSpec extends SparkSpec {
   import spark.implicits._
 
   test("shared co-purchase edge CTE: memoized frame identical to the direct derivation") {
-    graft.SparkEntry.resetCoPurchaseEdges(spark)
+    graft.core.SharedState.reset(spark, "graph.edges")
     val memo = graft.SparkEntry.coPurchaseEdges(spark, sf)
       .orderBy("item_a", "item_b").collect().toSeq
     val direct = Graph.coOccurrenceEdges(
@@ -19,7 +19,7 @@ class GraphSpec extends SparkSpec {
     // a second call is a memo hit — the same checkpointed frame object
     assert(graft.SparkEntry.coPurchaseEdges(spark, sf) eq
       graft.SparkEntry.coPurchaseEdges(spark, sf))
-    graft.SparkEntry.resetCoPurchaseEdges(spark)
+    graft.core.SharedState.reset(spark, "graph.edges")
   }
 
   test("shared CF co-occurrence memo: warm == fresh for both consumers, reset forgets") {
@@ -29,7 +29,7 @@ class GraphSpec extends SparkSpec {
           .select("l_orderkey", "l_suppkey"),
         col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-    Graph.resetCoStateMemo(spark)
+    graft.core.SharedState.reset(spark, "cf.co_state")
     val simFresh = Graph.itemSimilarity(b, "cust", "supp").collect().toSeq
     val recFresh = Graph.recommendations(b, "cust", "supp").collect().toSeq
     Graph.warmCoState(b, key = "spec-cf", basketCol = "cust", itemCol = "supp")
@@ -40,7 +40,7 @@ class GraphSpec extends SparkSpec {
     assert(Graph.recommendations(b, "cust", "supp", memoKey = Some("spec-cf"))
       .collect().toSeq == recFresh)
     assert(simFresh.nonEmpty && recFresh.nonEmpty)
-    Graph.resetCoStateMemo(spark)
+    graft.core.SharedState.reset(spark, "cf.co_state")
   }
 
   test("marketBasket: counts, confidence, and lift match hand computation") {

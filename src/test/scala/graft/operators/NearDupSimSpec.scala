@@ -258,7 +258,7 @@ class NearDupSimSpec extends SparkSpec {
     assert(Similarity.semanticNearDupPairs(emb, 0.4,
         coarseMemoKey = Some("spec-memo")).collect().toSeq ==
       Similarity.semanticNearDupPairs(emb, 0.4).collect().toSeq)
-    IvfIndex.resetCoarseMemo(spark)
+    graft.core.SharedState.reset(spark, "ivf.coarse")
   }
 
   test("IVF multi-iteration Lloyd is deterministic and partition-invariant") {

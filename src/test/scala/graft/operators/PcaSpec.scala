@@ -9,7 +9,7 @@ class PcaSpec extends SparkSpec {
 
   test("parsevalAudit with a precomputed covariance is identical to the self-computed form") {
     val emb = graft.sources.Tables.embeddings(spark, sf)
-    graft.SparkEntry.resetEmbeddingCov(spark)
+    graft.core.SharedState.reset(spark, "vector.cov")
     val shared = Pca.parsevalAudit(emb, "embedding",
       cov = Some(graft.SparkEntry.embeddingCov(spark, sf))).collect().toSeq
     val direct = Pca.parsevalAudit(emb, "embedding").collect().toSeq
@@ -17,7 +17,7 @@ class PcaSpec extends SparkSpec {
     // and the memoized covariance frame itself matches the direct operator
     assert(graft.SparkEntry.embeddingCov(spark, sf).collect().toSeq ==
       VectorOps.covarianceMatrix(emb, "embedding").collect().toSeq)
-    graft.SparkEntry.resetEmbeddingCov(spark)
+    graft.core.SharedState.reset(spark, "vector.cov")
   }
 
   test("jacobi: known 2x2 eigensystem") {

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * (basis, corpus), served to every consumer entry point. Results must be
   * bit-identical to memo-less training — the memo elides work, never
   * changes answers — and a reused corpus key over a DIFFERENT relation
-  * must miss (the [[graft.core.MemoPin]] fingerprint contract). */
+  * must miss (the [[graft.core.SharedState]] fingerprint contract). */
 class PqMemoSpec extends SparkSpec {
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
@@ -36,9 +36,9 @@ class PqMemoSpec extends SparkSpec {
         == freshIvfrpq)
       assert(rows(PqIndex.codes(emb, memoKey = Some(key))) == freshCodes)
     } finally {
-      PqIndex.resetPqMemo(spark, "raw")
-      PqIndex.resetPqMemo(spark, "residual")
-      IvfIndex.resetCoarseMemo(spark)
+      graft.core.SharedState.reset(spark, "pq.raw")
+      graft.core.SharedState.reset(spark, "pq.residual")
+      graft.core.SharedState.reset(spark, "ivf.coarse")
     }
   }
 
@@ -56,7 +56,7 @@ class PqMemoSpec extends SparkSpec {
       assert(memoShifted == rows(PqIndex.codes(shifted)))
       // and the original entry still serves the original corpus
       assert(rows(PqIndex.codes(emb, memoKey = Some(key))) == memoFirst)
-    } finally PqIndex.resetPqMemo(spark, "raw")
+    } finally graft.core.SharedState.reset(spark, "pq.raw")
   }
 
   test("warmCodebooks pre-trains both bases: owner and consumer results " +
@@ -70,9 +70,9 @@ class PqMemoSpec extends SparkSpec {
       assert(rows(PqIndex.ivfrpqTopK(emb, coarseMemoKey = Some(key)))
         == rows(PqIndex.ivfrpqTopK(emb)))
     } finally {
-      PqIndex.resetPqMemo(spark, "raw")
-      PqIndex.resetPqMemo(spark, "residual")
-      IvfIndex.resetCoarseMemo(spark)
+      graft.core.SharedState.reset(spark, "pq.raw")
+      graft.core.SharedState.reset(spark, "pq.residual")
+      graft.core.SharedState.reset(spark, "ivf.coarse")
     }
   }
 }

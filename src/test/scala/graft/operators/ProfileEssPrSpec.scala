@@ -56,7 +56,7 @@ class ProfileEssPrSpec extends SparkSpec {
 
   test("shared exact-profile memo: warm == fresh for both lanes, reset forgets") {
     val li = graft.sources.Tables.lineitem(spark, sf)
-    Profile.resetProfileMemo(spark)
+    graft.core.SharedState.reset(spark, "profile.exact")
     val fresh = Profile.tableProfile(li).collect().toSeq
     val freshApprox = Profile.tableProfileApprox(li).collect().toSeq
     Profile.warmProfile(li, key = "spec-profile")
@@ -70,7 +70,7 @@ class ProfileEssPrSpec extends SparkSpec {
     // a second memoized call is a hit — the same checkpointed frame object
     assert(Profile.tableProfile(li, memoKey = Some("spec-profile")) eq
       Profile.tableProfile(li, memoKey = Some("spec-profile")))
-    Profile.resetProfileMemo(spark)
+    graft.core.SharedState.reset(spark, "profile.exact")
   }
 
   test("prCurve: two clean bins — exact precision/recall/F1 ladder") {
